@@ -357,22 +357,21 @@ def _signatures_from_tokens(
         F.xxhash64(tok_col).alias("__h"),
         F.pmod(F.xxhash64(tok_col), F.lit(n_hashes)).alias("__b"),
     )
-    aggs = [
-        F.min(F.when(F.col("__b") == i, F.col("__h"))).alias(f"__m{i}")
-        for i in range(n_hashes)
-    ]
-    g = ex.groupBy(*keys).agg(
-        *aggs,
-        F.count(F.lit(1)).alias("n_shingles"),
-        F.min("__h").alias("__gmin"),
-    )
-    sig = F.array(
-        *[
-            F.coalesce(F.col(f"__m{i}"), F.xxhash64(F.lit(i), F.col("__gmin")))
+    # Bin i is the min hash that landed in it; an empty bin is
+    # densified to xxhash64(i, global min). Written as one SQL
+    # expression because each Column call is a py4j round trip: the
+    # 2 x n_hashes Column form takes ~0.6 s to build.
+    sig = F.expr(
+        "array("
+        + ", ".join(
+            f"coalesce(min(if(__b = {i}, __h, NULL)), xxhash64({i}, min(__h)))"
             for i in range(n_hashes)
-        ]
+        )
+        + ")"
     )
-    return g.select(*keys, sig.alias("sig"), "n_shingles")
+    return ex.groupBy(*keys).agg(
+        sig.alias("sig"), F.count(F.lit(1)).alias("n_shingles")
+    )
 
 
 def _band_keys(sig_df: DataFrame, id_col: str, bands: int) -> DataFrame:

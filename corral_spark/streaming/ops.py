@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from corral_spark.functions.det import dsum
-from corral_spark.sources.tables import table_path
+from corral_spark.sources.tables import read_parquet, table_path
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
 
@@ -67,8 +67,9 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``readStream`` requires an explicit schema, but the on-disk ``ts``
     resolution varies by writer — TIMESTAMP(NANOS) (scans as long
     under nanosAsLong), plain micros TIMESTAMP, or TIMESTAMP_NTZ
-    (DuckDB-written scale-ups). Probe the batch scan's footer-inferred
-    type once (metadata-only, no data read) and build the stream
+    (DuckDB-written scale-ups). Take the type the batch read infers
+    from the file footer (``read_parquet``: a Spark job the first time
+    a file is seen, a cached schema after that) and build the stream
     schema + normalization to match, so stream and batch agree on the
     same files whatever wrote them — the same tri-format contract as
     sources.tables.load_table."""
@@ -83,7 +84,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ts_type = (
-        spark.read.parquet(table_path(sf_dir, "events")).schema["ts"].dataType
+        read_parquet(spark, table_path(sf_dir, "events")).schema["ts"].dataType
     )
     schema = StructType(
         [
@@ -543,7 +544,7 @@ def foreach_batch_upsert_sink(
                 if str(b) in owned
             ]
             if cur_paths:
-                current = spark.read.parquet(*cur_paths)
+                current = _read_buckets(spark, cur_paths, base)
             else:
                 value_schema = StructType(
                     [
@@ -780,7 +781,22 @@ def read_upsert_snapshot(
 
         schema = StructType.fromJson(m["schema"])
         return spark.createDataFrame([], schema)
-    return spark.read.parquet(*paths)
+    return _read_buckets(spark, paths, m)
+
+
+def _read_buckets(
+    spark: SparkSession, paths: list[str], manifest: dict
+) -> DataFrame:
+    """Parquet read of bucket directories a manifest points at. The
+    manifest records the value schema the buckets were written with;
+    passing it skips schema inference (a footer-reading Spark job).
+    A manifest without a ``schema`` is inferred from the files."""
+    from pyspark.sql.types import StructType
+
+    schema = manifest.get("schema")
+    if schema is None:
+        return spark.read.parquet(*paths)
+    return spark.read.schema(StructType.fromJson(schema)).parquet(*paths)
 
 
 def run_available_now(

@@ -571,3 +571,79 @@ class TestNativeMediaDecode:
         assert rows[1]["n_frames"] == 8
         assert rows[1]["rms"] == want_rms
         assert rows[2]["sample_rate"] is None  # malformed -> NULLs, no crash
+
+
+def _oph_reference(spark, tok, keys, n_hashes):
+    """OPH signatures built independently of the operator: per
+    (key, bin) min hash in Spark, then assembly and densification of
+    empty bins with xxhash64(bin, global min) in Python."""
+    per_bin = (
+        tok.select(*keys, F.xxhash64("__s").alias("h"))
+        .groupBy(*keys, F.pmod("h", F.lit(n_hashes)).alias("bin"))
+        .agg(F.min("h").alias("m"), F.count(F.lit(1)).alias("c"))
+        .collect()
+    )
+    docs = {}
+    for r in per_bin:
+        key = tuple(r[k] for k in keys)
+        bins, n = docs.get(key, ({}, 0))
+        bins[r.bin] = r.m
+        docs[key] = (bins, n + r.c)
+    gmin = {key: min(bins.values()) for key, (bins, _) in docs.items()}
+    fill = [
+        (b, gmin[key])
+        for key, (bins, _) in docs.items()
+        for b in range(n_hashes)
+        if b not in bins
+    ]
+    dense = {
+        (r.b, r.g): r.x
+        for r in spark.createDataFrame(fill, "b int, g long")
+        .select("b", "g", F.xxhash64("b", "g").alias("x"))
+        .collect()
+    }
+    return {
+        key: (
+            [
+                bins[b] if b in bins else dense[(b, gmin[key])]
+                for b in range(n_hashes)
+            ],
+            n,
+        )
+        for key, (bins, n) in docs.items()
+    }
+
+
+@pytest.mark.parametrize("keys", [["id"], ["__side", "id"]])
+def test_oph_signatures_match_reference_bin_for_bin(spark, keys):
+    """Every bin of every signature equals an independent OPH build,
+    including the densified bins of documents with fewer shingles
+    than bins and the tagged (side, id) key of the cross-corpus
+    path."""
+    from corral_spark.operators.dedup import _signatures_from_tokens
+
+    n_hashes = 64
+    docs = {
+        1: [f"s{i}" for i in range(300)],  # more shingles than bins
+        2: ["a", "b", "c"],  # 61+ densified bins
+        3: ["a", "a", "b"],  # repeated shingle: counted twice
+        4: ["only"],
+    }
+    rows = [
+        (side, doc, s)
+        for side in (0, 1)
+        for doc, shingles in docs.items()
+        for s in (shingles if side == 0 else shingles[::-1] + ["x"])
+    ]
+    tok = spark.createDataFrame(rows, "__side int, id long, __s string")
+    if keys == ["id"]:
+        tok = tok.filter("__side = 0").drop("__side")
+    got = {
+        tuple(r[k] for k in keys): (list(r.sig), r.n_shingles)
+        for r in _signatures_from_tokens(
+            tok, keys[0] if len(keys) == 1 else keys, "__s", n_hashes
+        ).collect()
+    }
+    want = _oph_reference(spark, tok, keys, n_hashes)
+    assert got == want
+    assert len(got) == len(docs) * len(keys)

@@ -97,3 +97,93 @@ def test_amplab_csv_native_path(spark, tmp_path):
         (r.pageURL, r.pageRank) for r in clean.filter("pageRank > 25").collect()
     )
     assert got == [("url_a", 50), ("url_c", 99)]
+
+
+def jobs_in_group(spark, group, fn):
+    """Run ``fn`` under a job group; return its result and the ids of
+    the Spark jobs it scheduled."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_reuses_inferred_schema(spark, tmp_path):
+    """A second read of an unchanged single-file table skips parquet
+    schema inference: zero Spark jobs, same schema, same rows."""
+    import shutil
+
+    from corral_spark.sources.tables import load_table, table_path
+    from tests.conftest import SF_SMOKE
+
+    # A fresh copy, so no earlier test has cached its schema.
+    shutil.copy(
+        table_path(SF_SMOKE, "customer"),
+        table_path(str(tmp_path), "customer"),
+    )
+    first, jobs1 = jobs_in_group(
+        spark, "schema-cache-1", lambda: load_table(spark, str(tmp_path), "customer")
+    )
+    second, jobs2 = jobs_in_group(
+        spark, "schema-cache-2", lambda: load_table(spark, str(tmp_path), "customer")
+    )
+    assert jobs1, "the first read must infer (a footer-reading job)"
+    assert jobs2 == []
+    assert second.schema == first.schema
+    assert sorted(second.collect()) == sorted(first.collect())
+
+
+def test_directory_table_rewritten_in_place_is_inferred_again(spark, tmp_path):
+    from corral_spark.sources.tables import load_table, table_path
+
+    path = table_path(str(tmp_path), "documents")
+    spark.createDataFrame([(1, "a")], "doc_id long, text string").write.parquet(
+        path
+    )
+    assert load_table(spark, str(tmp_path), "documents").columns == [
+        "doc_id",
+        "text",
+    ]
+    spark.createDataFrame([(1, 2.5)], "doc_id long, score double").write.mode(
+        "overwrite"
+    ).parquet(path)
+    again = load_table(spark, str(tmp_path), "documents")
+    assert again.columns == ["doc_id", "score"]
+    assert again.collect()[0].score == 2.5
+
+
+def test_schema_cache_keys_on_inference_confs(spark, tmp_path):
+    """A TIMESTAMP(NANOS) ``ts`` infers as bigint under nanosAsLong and
+    is rejected without it: once the conf flips, a read must infer
+    again instead of getting the cached bigint ``events`` schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+    from pyspark.errors import AnalysisException
+    from pyspark.sql.types import LongType
+
+    from corral_spark.sources.tables import load_table, read_parquet, table_path
+
+    path = table_path(str(tmp_path), "events")
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2], pa.int64()),
+                "ts": pa.array([1_000_000_001, 2_000_000_002], pa.timestamp("ns")),
+            }
+        ),
+        path,
+    )
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(conf)
+    try:
+        load_table(spark, str(tmp_path), "events")  # sets nanosAsLong
+        assert isinstance(read_parquet(spark, path).schema["ts"].dataType, LongType)
+        spark.conf.set(conf, "false")
+        with pytest.raises(AnalysisException, match="PARQUET_TYPE_ILLEGAL"):
+            read_parquet(spark, path)
+    finally:
+        spark.conf.set(conf, before)

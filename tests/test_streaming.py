@@ -391,3 +391,51 @@ def test_streaming_render_is_session_tz_independent(spark):
     assert results["America/New_York"] == results["UTC"]
     assert results["sess_Asia/Kathmandu"] == results["sess_UTC"]
     assert results["sess_America/New_York"] == results["sess_UTC"]
+
+
+def test_upsert_snapshot_read_uses_manifest_schema(spark, tmp_path):
+    """read_upsert_snapshot takes the schema the manifest records and
+    schedules no inference job; a manifest without ``schema`` is
+    inferred from the bucket files, with the same rows."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from corral_spark.streaming.ops import (
+        foreach_batch_upsert_sink,
+        read_upsert_snapshot,
+    )
+    from tests.test_sources import jobs_in_group
+
+    src = tmp_path / "cdc"
+    src.mkdir()
+    pq.write_table(
+        pa.table(
+            {
+                "k": pa.array(range(20), pa.int64()),
+                "v": pa.array([f"v{i}" for i in range(20)], pa.string()),
+            }
+        ),
+        str(src / "b1.parquet"),
+    )
+    table = str(tmp_path / "table")
+    stream = spark.readStream.schema("k long, v string").parquet(str(src))
+    foreach_batch_upsert_sink(
+        stream, table, str(tmp_path / "ckpt"), "k", n_buckets=4
+    ).awaitTermination()
+
+    snap, jobs = jobs_in_group(
+        spark, "upsert-read", lambda: read_upsert_snapshot(spark, table)
+    )
+    assert jobs == []
+    want = sorted((i, f"v{i}") for i in range(20))
+    assert sorted(tuple(r) for r in snap.collect()) == want
+
+    manifest = tmp_path / "table" / "v=0" / "manifest.json"
+    m = json.loads(manifest.read_text())
+    del m["schema"]
+    manifest.write_text(json.dumps(m))
+    inferred = read_upsert_snapshot(spark, table)
+    assert inferred.schema == snap.schema
+    assert sorted(tuple(r) for r in inferred.collect()) == want

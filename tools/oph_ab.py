@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """A/B the OPH signature aggregation (r16 residual #2): the shipped
-ONE wide hash aggregate (64 min(when __b == i) buffers -> one row per
-doc) vs a TWO-LEVEL shape (groupBy(id, bin).min -> groupBy(id)
+ONE wide hash aggregate (64 min(if(__b = i, __h, NULL)) buffers -> one
+row per doc) vs a TWO-LEVEL shape (groupBy(id, bin).min -> groupBy(id)
 map_from_entries), which trades 64 agg-expression evaluations per
 token row for one extra narrow shuffle of <= n_hashes rows/doc.
 

@@ -66,6 +66,11 @@ def main(workdir: str | None = None) -> None:
         + os.environ.get("PYTHONPATH", "")
     )
 
+    # SPARK_LOCAL_DIRS overrides spark.local.dir in the JVM, so an
+    # inherited value would move the block-manager tree out of the
+    # storage root this probe configures.
+    os.environ.pop("SPARK_LOCAL_DIRS", None)
+
     from corral_spark.session import build_session, object_store_conf
 
     # Jar-independent subset at build time; the class keys are probed
