@@ -22,12 +22,20 @@ Scale design notes (100 TB posture):
 from __future__ import annotations
 
 import re
+from functools import reduce
 
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, StringType
+from pyspark.sql.types import (
+    ArrayType,
+    ByteType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+)
 from pyspark.sql.window import Window
 
 from corral_spark.functions.text import _NON_ALNUM as _NON_ALNUM_RE, tokenize
@@ -36,7 +44,7 @@ from corral_spark.materialize import materialize
 
 #: Document-frequency cap for the short-doc exact inverted index: a
 #: shingle contained in more than this many SHORT documents never
-#: becomes an index key (see _short_exact_cands for the completeness
+#: becomes an index key (see _short_cands for the completeness
 #: argument). 64 bounds any one shingle's join fan-out at 64x64 pairs
 #: while leaving typical short-corpus shingles (df 1-3) untouched.
 SHORT_DF_MAX = 64
@@ -271,13 +279,13 @@ def jaccard_pairs(
     tok = df.select(F.col(id_col).alias("id"), F.explode(sh).alias("token"))
     tok = materialize(tok, eager=True)
     if max_df is not None:
-        # Keep-list inversion (r16): "keep tokens with df <= max_df"
+        # Keep-list inversion: "keep tokens with df <= max_df"
         # used to broadcast the KEEP list — but most shingles are
         # unique, so that list is CORPUS-SCALED (billions at 100 TB;
         # an explicit F.broadcast of it is exactly the driver-OOM the
         # sf3 canary exposed in the banded path). Anti-join against
         # the HOT list instead: identical semantics, and hot is
-        # bounded by total_incidences/max_df (the _short_exact_cands
+        # bounded by total_incidences/max_df (the _short_cands
         # argument), not by the corpus.
         hot = (
             tok.groupBy("token")
@@ -374,12 +382,11 @@ def _signatures_from_tokens(
     )
 
 
-def _band_keys(sig_df: DataFrame, id_col: str, bands: int) -> DataFrame:
-    """(id, sig, band, key): one row per (document, band); key is the
-    xxhash64 of that band's signature slice. ONE definition shared by
-    the self-join path (minhash_lsh_pairs) and the cross-corpus path
-    (minhash_pairs_across) so the banding rule cannot drift between
-    them."""
+def _band_keys(sig_df: DataFrame, keys: list[str], bands: int) -> DataFrame:
+    """(*keys, sig, band, key): one row per (document, band); key is
+    the xxhash64 of that band's signature slice. ONE definition shared
+    by the estimate path (minhash_lsh_pairs) and the verified MinHash
+    kernel so the banding rule cannot drift between them."""
     n_hashes_col = F.size("sig")
     rows_per_band = F.floor(n_hashes_col / F.lit(bands))
     band_key = F.explode(
@@ -403,10 +410,8 @@ def _band_keys(sig_df: DataFrame, id_col: str, bands: int) -> DataFrame:
             ),
         )
     )
-    return sig_df.select(
-        F.col(id_col).alias("id"), F.col("sig"), band_key.alias("__bk")
-    ).select(
-        "id",
+    return sig_df.select(*keys, F.col("sig"), band_key.alias("__bk")).select(
+        *keys,
         "sig",
         F.col("__bk.band").alias("band"),
         F.col("__bk.key").alias("key"),
@@ -442,45 +447,6 @@ def bucket_id_pairs(
     return out.dropDuplicates(["id_a", "id_b"]) if dedup else out
 
 
-def _banded_cands(sig_df: DataFrame, id_col: str, bands: int) -> DataFrame:
-    """Raw candidate id pairs from banded signatures — the sig-FREE
-    candidate generator for the verified path (r16 optimization).
-
-    ``minhash_lsh_pairs`` must carry each document's full signature
-    array through the bucket self-join because it scores candidates by
-    signature agreement; the VERIFIED path throws that estimate away
-    (exact shingle Jaccard decides membership), so shipping the
-    64-long ``sig`` array through the pair join was pure shuffle
-    weight — 512 bytes/row on both join sides and in the materialized
-    band table (guide §2.3: project before the exchange). Here only
-    (band, key, id) crosses: 24 bytes/row, the minimum that determines
-    the candidate set.
-
-    Output is NOT deduplicated (a pair sharing several bands emits
-    once per shared band): callers union these with the short-doc
-    candidates and pay ONE dropDuplicates for the whole candidate set
-    instead of one per source (r16: the previous shape deduplicated
-    three times — inside bucket_pairs, inside _short_exact_cands, and
-    again after the union — three shuffles on the same key).
-    Output: (id_a, id_b) with id_a < id_b, duplicates possible.
-    """
-    keyed = _band_keys(sig_df, id_col, bands).select("id", "band", "key")
-    # Upstream is the signature aggregation; materialize so the two
-    # self-join sides don't recompute it (same rationale as
-    # bucket_pairs, but the stored frame is 3 scalars/row, not the
-    # signature array).
-    keyed = materialize(keyed, eager=True)
-    left = keyed.select("band", "key", F.col("id").alias("id_a"))
-    right = keyed.select("band", "key", F.col("id").alias("id_b"))
-    # Corpus-scaled both sides — shuffle_hash per the bucket_pairs
-    # rule (never an estimate-based broadcast of a corpus table).
-    return (
-        left.join(right.hint("shuffle_hash"), on=["band", "key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-    )
-
-
 def minhash_lsh_pairs(
     sig_df: DataFrame,
     id_col: str,
@@ -497,9 +463,9 @@ def minhash_lsh_pairs(
     per side — never all-pairs.
     Output: (id_a, id_b, est_jaccard) with id_a < id_b.
     """
-    banded = _band_keys(sig_df, id_col, bands).select(
-        "id", "sig", F.struct("band", "key").alias("bk")
-    )
+    banded = _band_keys(
+        sig_df.select(F.col(id_col).alias("id"), "sig"), ["id"], bands
+    ).select("id", "sig", F.struct("band", "key").alias("bk"))
 
     cand = bucket_pairs(banded, "bk", "id")
     agree = F.size(
@@ -560,21 +526,20 @@ def minhash_verified_pairs(
     short docs; index side: the partner population, docs of size
     <= small_max/threshold — the Jaccard length filter's bound on a
     short doc's possible partners). Docs at or below small_max skip
-    the signature aggregate and the band join entirely (r16: they
-    contribute only exactly-covered pairs, so banding them was pure
-    throwaway work — and mixed short-long pairs previously rode on
-    the short side's least reliable signature); only docs ABOVE
-    small_max are banded, which covers all remaining (long, long)
-    pairs. Candidates stay a superset of the exact Jaccard >= t set
-    by construction, and verification decides membership either way.
+    the signature aggregate and the band join entirely: they
+    contribute only exactly-covered pairs, so banding them would be
+    throwaway work. Only docs ABOVE small_max are banded, which covers
+    all remaining (long, long) pairs. Candidates stay a superset of
+    the exact Jaccard >= t set by construction, and verification
+    decides membership either way.
 
     The shingle UDF runs ONCE (materialize barrier), feeding both the
     signature aggregation and the verification join.
     Output: (id_a, id_b, jaccard) exact, id_a < id_b.
     """
-    _, verified, _ = _minhash_cands_and_verified(
-        df, text_col, id_col, threshold, n_hashes, bands, shingle_n,
-        short_df_max=short_df_max,
+    _, verified, _ = _minhash_kernel(
+        df, None, text_col, id_col, threshold, n_hashes, bands, shingle_n,
+        short_df_max,
     )
     return verified
 
@@ -589,426 +554,23 @@ def minhash_pair_counts(
     shingle_n: int = 5,
     short_df_max: int = SHORT_DF_MAX,
 ) -> dict[str, int]:
-    """Scaling diagnostic (r4 verdict item 1): the CANDIDATE-pair and
-    verified-pair counts of the minhash pipeline, computed off one
-    materialized candidate set. Counts are noise-free linearity
-    evidence that wall-clock timings on a shared host are not: if the
-    corpus grows k-fold and candidates grow ~k-fold, the banded-LSH
-    stage is linear and any superlinear *timing* is host noise; a
-    superlinear candidate count is the real O(n^2) signal (this
-    engine's analog of the reference's reducer-memory bound —
-    /root/reference/README.md:213 — the thing that breaks silently at
-    scale)."""
-    cands, verified, diag = _minhash_cands_and_verified(
-        df,
-        text_col,
-        id_col,
-        threshold,
-        n_hashes,
-        bands,
-        shingle_n,
-        materialize_cands=True,
-        short_df_max=short_df_max,
+    """Scaling diagnostic: the CANDIDATE-pair and verified-pair counts
+    of the minhash pipeline, computed off one materialized candidate
+    set. Counts are noise-free linearity evidence that wall-clock
+    timings on a shared host are not: if the corpus grows k-fold and
+    candidates grow ~k-fold, the banded-LSH stage is linear and any
+    superlinear *timing* is host noise; a superlinear candidate count
+    is the real O(n^2) signal (this engine's analog of the reference's
+    reducer-memory bound — the thing that breaks silently at scale).
+
+    Also counts the df-capped short-doc index's own volume drivers: if
+    hot_heavy_docs or short_candidates ever grows superlinearly in
+    corpus size, the degenerate stop-shingle population is taking
+    over the fallback."""
+    return _kernel_counts(
+        df, None, text_col, id_col, threshold, n_hashes, bands, shingle_n,
+        short_df_max,
     )
-    # Short-path canary (r6 verdict item 3): the df-capped short-doc
-    # index's own volume drivers — if hot_heavy_docs or
-    # short_candidates ever grows superlinearly in corpus size, the
-    # degenerate stop-shingle population is taking over the fallback.
-    return {
-        "candidates": cands.count(),
-        "pairs": verified.count(),
-        "short_candidates": diag["short_candidates"].count(),
-        "hot_shingles": diag["hot_shingles"].count(),
-        "hot_heavy_docs": diag["hot_heavy_docs"].count(),
-    }
-
-
-def _minhash_cands_and_verified(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    threshold: float,
-    n_hashes: int,
-    bands: int,
-    shingle_n: int,
-    materialize_cands: bool = False,
-    short_df_max: int = SHORT_DF_MAX,
-) -> tuple[DataFrame, DataFrame, dict[str, DataFrame]]:
-    """Shared two-phase pipeline behind minhash_verified_pairs /
-    minhash_pair_counts. ``materialize_cands`` cuts lineage at the
-    candidate set so a diagnostic caller can count candidates AND
-    verified pairs without recomputing candidate generation; the
-    normal path leaves it lazy (one job, no extra barrier). Third
-    return value: lazy diagnostic frames for the short-path canary
-    (short_candidates, hot_shingles, hot_heavy_docs)."""
-    # Narrow projection first (only the id and text cross any spread
-    # shuffle), then re-spread when the source scan under-parallelizes
-    # so the Arrow shingle UDF runs on every core (spread_input is a
-    # no-op on an already-parallel scan).
-    src = spread_input(
-        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t"))
-    )
-    shing = src.select(
-        "id", word_shingles_arrow(F.col("__t"), shingle_n).alias("__sh")
-    )
-    # Lazy barrier (r17): the first action to touch this is
-    # _banded_cands' eager keyed checkpoint, whose lineage reads shing
-    # through a SINGLE leg (tok -> sigs -> band keys) — it computes and
-    # stores the shingle partitions as a side effect, so the dedicated
-    # eager job this used to pay was pure scheduling latency. Every
-    # later consumer (ptok, the verification a/b legs) hits the stored
-    # partitions. Frames consumed by two legs of ONE job (keyed, the
-    # cross-corpus sig frame) must stay eager — a lazy first action
-    # would race both legs into computing the same partitions.
-    shing = materialize(shing, eager=False)
-    # Length-filtered candidate routing (r16, guide §1.2 "don't compute
-    # what you throw away" + the PPJoin length-filter family):
-    #
-    # * small_max = n_hashes/t is the exact-path population bound: any
-    #   pair the OPH bands can miss has min(|a|,|b|) < n_hashes and
-    #   therefore both sides <= n_hashes/t (Jaccard length filter
-    #   t*|b| <= |a∩b| <= |a|).
-    # * Banding therefore only needs docs ABOVE small_max: a qualifying
-    #   pair with min <= small_max has max <= small_max/t (same length
-    #   filter), so it is covered EXACTLY by the partner-extended
-    #   inverted index below — previously such mixed pairs rode on the
-    #   short side's (by construction least reliable) OPH signature.
-    #   Every doc below the bound skips the signature aggregate and the
-    #   band self-join entirely; pairs with BOTH sides above it keep
-    #   the unchanged banded path.
-    # * The verified output is invariant: candidates remain a superset
-    #   of the exact Jaccard >= t pair set (proof above per route), and
-    #   the exact verification join rejects everything else.
-    small_max = int(n_hashes / max(threshold, 0.1))
-    sz = F.size("__sh")
-    is_short = sz <= small_max
-    # Partner bound, admit-direction slack (cf. the ppjoin ceil slack):
-    # J >= t and |a| <= small_max force t*|b| <= small_max.
-    is_partner = (sz * F.lit(float(threshold))) <= F.lit(small_max + 1e-6)
-    tok = shing.filter(~is_short).select("id", F.explode("__sh").alias("__s"))
-    sigs = _signatures_from_tokens(tok, "id", "__s", n_hashes)
-    # Every band collision is a candidate; the exact verifier (not the
-    # signature estimate) decides membership — so candidates come from
-    # the sig-free generator (_banded_cands): only (band, key, id)
-    # crosses the pair join, and dedup is deferred to the single
-    # dropDuplicates after the short-path union below.
-    cands = _banded_cands(sigs, "id", bands)
-    # Exact candidates for every pair with min(|a|,|b|) <= small_max:
-    # df-capped inverted index whose PROBE side is the short docs and
-    # whose INDEX side is the partner population (docs any short doc
-    # could pair with), with a hot-heavy fallback preserving
-    # completeness (_short_partner_cands has the argument). Token rows
-    # re-derive from the materialized shingle checkpoint with a
-    # filter+explode — a narrow map, no extra exchange.
-    ptok = shing.filter(is_partner).select(
-        "id", is_short.alias("__p"), F.explode("__sh").alias("__s")
-    )
-    small_cands, short_diag = _short_partner_cands(
-        ptok, threshold, df_max=short_df_max
-    )
-    cands = cands.unionByName(small_cands).dropDuplicates(["id_a", "id_b"])
-    if materialize_cands:
-        cands = materialize(cands, eager=False)
-    a = shing.select(F.col("id").alias("id_a"), F.col("__sh").alias("__sha"))
-    b = shing.select(F.col("id").alias("id_b"), F.col("__sh").alias("__shb"))
-    inter = F.size(F.array_intersect("__sha", "__shb"))
-    union = F.size("__sha") + F.size("__shb") - inter
-    jac = inter.cast("double") / union.cast("double")
-    verified = (
-        # a/b carry every doc's shingle ARRAY — the heaviest
-        # corpus-scaled frames in the plan; never broadcast-built.
-        cands.join(a.hint("shuffle_hash"), "id_a")
-        .join(b.hint("shuffle_hash"), "id_b")
-        .select("id_a", "id_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
-    # Diag frame deduped so the bench count canary keeps its historic
-    # semantics (distinct short-path candidate pairs) now that the
-    # pipeline defers dedup to the union.
-    short_cands_distinct = small_cands.dropDuplicates(["id_a", "id_b"])
-    return cands, verified, {
-        "short_candidates": short_cands_distinct, **short_diag
-    }
-
-
-def _short_exact_cands(
-    sa: DataFrame,
-    sb: DataFrame,
-    threshold: float,
-    df_max: int = SHORT_DF_MAX,
-    symmetric: bool = True,
-    dedup: bool = True,
-) -> tuple[DataFrame, dict[str, DataFrame]]:
-    """Exact candidate pairs for the short-document completeness path,
-    bounded in corpus skew by a document-frequency cap (r6 verdict
-    item 3). ``sa``/``sb`` are the (id, __s) distinct-shingle rows of
-    the SHORT docs on each side — pass the same frame twice with
-    ``symmetric=True`` for the self-join path (output then filtered to
-    id_a < id_b).
-
-    Why a cap is safe (completeness argument): for Jaccard(A,B) >= t,
-    the shared-shingle count |A∩B| >= t*|A∪B| >= t*max(|A|,|B|), i.e.
-    at least ceil(t*|A|) AND ceil(t*|B|) shingles are shared
-    (equivalently >= t/(1+t)*(|A|+|B|)). The inverted index is
-    restricted to shingles whose document frequency over the short
-    population is <= df_max; a qualifying pair can evade it only if
-    EVERY shared shingle is hot (df > df_max), which by the bound
-    forces hot_count(X) >= ceil(t*|X|) on BOTH sides. Such "hot-heavy"
-    docs are routed to a fallback equi-join on their HOT shingles
-    restricted to the hot-heavy set — so no qualifying pair is lost,
-    while NO path ever joins an uncapped shingle against the full
-    population (the previous form joined short-doc shingles against
-    the whole other corpus's token table: one stop-phrase 5-gram
-    shared by a short doc and 1% of a 100 TB corpus made it the
-    dominant candidate generator). Sub-threshold candidates either
-    path admits are removed by the exact verification downstream.
-
-    Returns (candidates, diag) where diag maps canary names to lazy
-    frames (hot shingles, hot-heavy docs) for the bench count canary —
-    the minhash_counts discipline applied to this path.
-
-    ``dedup=False`` skips the final dropDuplicates: callers that union
-    these with banded candidates pay ONE dedup for the whole set (the
-    r16 shape — three dedup shuffles on the same key collapsed to
-    one). The candidate SET is unchanged either way.
-    """
-    pop = sa if symmetric else sa.unionByName(sb)
-    dfreq = pop.groupBy("__s").agg(F.count(F.lit(1)).alias("__df"))
-
-    # Annotate every token row with its population document frequency:
-    # ONE corpus-scaled join (r16 — replaces the previous anti-join +
-    # inner-join pair per side against a materialized hot list), then
-    # hot/cold are cheap filters over the annotated checkpoint and the
-    # per-doc totals (__n) and hot counts (__hc) come from a SINGLE
-    # aggregate instead of two aggregates plus a join.
-    cold = F.col("__df") <= df_max
-
-    def annotate(tokens: DataFrame) -> DataFrame:
-        # dfreq is vocabulary-sized over the short population —
-        # corpus-scaled, so shuffle_hash per the bucket_pairs rule.
-        return materialize(
-            tokens.join(dfreq.hint("shuffle_hash"), on="__s"), eager=False
-        )
-
-    anna = annotate(sa)
-    annb = anna if symmetric else annotate(sb)
-    cands = anna.filter(cold).select(
-        F.col("id").alias("id_a"), F.col("__s").alias("__t")
-    ).join(
-        # The short-doc inverted index: both sides scale with the
-        # short population — shuffle_hash per the corpus-scaled rule.
-        annb.filter(cold)
-        .select(F.col("id").alias("id_b"), F.col("__s").alias("__t"))
-        .hint("shuffle_hash"),
-        on="__t",
-    ).select("id_a", "id_b")
-
-    def hot_heavy(ann: DataFrame) -> DataFrame:
-        stats = ann.groupBy("id").agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.count(F.when(~cold, True)).alias("__hc"),
-        )
-        return (
-            # Same float-ceil completeness slack as the ppjoin prefix
-            # lengths: double rounding can overshoot an exact-integer
-            # t*n and exclude a boundary doc from the fallback — the
-            # one direction that loses pairs. The slack only ever
-            # ADMITS more docs (superset; verification prunes).
-            # Binary-exact at the shipped t=0.5, so no behavior
-            # change on the registry corpus.
-            stats.filter(
-                F.col("__hc")
-                >= F.ceil(F.lit(threshold) * F.col("__n") - F.lit(1e-6))
-            )
-            .select("id")
-        )
-
-    hha = hot_heavy(anna)
-    hhb = hha if symmetric else hot_heavy(annb)
-    # Hot-heavy id lists and hot-token rows can reach corpus scale on
-    # a boilerplate-heavy corpus (every short doc holding one
-    # stop-phrase) — shuffle_hash per the corpus-scaled rule, never an
-    # estimate-based broadcast of a checkpoint-opaque aggregate.
-    fallback = (
-        anna.filter(~cold).join(hha.hint("shuffle_hash"), on="id")
-        .select(F.col("id").alias("id_a"), F.col("__s").alias("__t"))
-        .join(
-            annb.filter(~cold)
-            .join(hhb.hint("shuffle_hash"), on="id")
-            .select(F.col("id").alias("id_b"), F.col("__s").alias("__t"))
-            .hint("shuffle_hash"),
-            on="__t",
-        )
-        .select("id_a", "id_b")
-    )
-    out = cands.unionByName(fallback)
-    if symmetric:
-        out = out.filter(F.col("id_a") < F.col("id_b"))
-    if dedup:
-        out = out.dropDuplicates(["id_a", "id_b"])
-    diag = {
-        "hot_shingles": dfreq.filter(F.col("__df") > df_max).select("__s"),
-        "hot_heavy_docs": (
-            hha if symmetric else hha.unionByName(hhb)
-        ).dropDuplicates(["id"]),
-    }
-    return out, diag
-
-
-def _short_partner_cands(
-    ptok: DataFrame,
-    threshold: float,
-    df_max: int = SHORT_DF_MAX,
-) -> tuple[DataFrame, dict[str, DataFrame]]:
-    """Exact candidate pairs for every qualifying pair whose SMALLER
-    side is short (<= n_hashes/t distinct shingles — the population the
-    OPH bands cannot be trusted with), for the self-join path.
-
-    ``ptok`` holds one row per (doc, distinct shingle) for the PARTNER
-    population — every doc with t*|doc| <= n_hashes/t, i.e. every doc
-    a short doc could reach at Jaccard >= t (length filter:
-    t*|b| <= |a∩b| <= |a| <= small_max) — with ``__p`` true on the
-    short docs themselves. The probe side of the inverted index is the
-    short rows; the index side is the whole partner population, so a
-    (short, medium) pair is admitted exactly rather than through the
-    short side's degraded OPH signature (pre-r16 behavior).
-
-    Completeness (the `_short_exact_cands` argument, extended): rank
-    every shared shingle of a qualifying pair (A short, B partner) by
-    its population document frequency. If ANY shared shingle is cold
-    (df <= df_max) the index join admits the pair. Otherwise every
-    shared shingle is hot; |A∩B| >= t*|A| and >= t*|B| (Jaccard bound),
-    so BOTH docs have hot-shingle count >= ceil(t*n) — both are
-    hot-heavy — and the hot-token fallback join admits the pair. The
-    df cap bounds any one shingle's index fan-out at df_max^2 pairs;
-    the fallback join is restricted to hot tokens OF hot-heavy docs on
-    both sides, never the full population.
-
-    Orientation: short-short pairs keep one orientation at the join
-    (id_a < id_b, matching the symmetric path's volume); (short,
-    medium) pairs exist in one orientation only and are normalized
-    with least/greatest. Output is raw (duplicates across shared
-    shingles possible) — callers pay the single union-level
-    dropDuplicates (the r16 deferred-dedup shape).
-    """
-    dfreq = ptok.groupBy("__s").agg(F.count(F.lit(1)).alias("__df"))
-    cold = F.col("__df") <= df_max
-    # One df-annotation join over the partner population's token rows
-    # (dfreq is vocabulary-sized — corpus-scaled, shuffle_hash per the
-    # bucket_pairs rule); probe/index/hot frames are filters over it.
-    ann = materialize(
-        ptok.join(dfreq.hint("shuffle_hash"), on="__s"), eager=False
-    )
-
-    def pairs_from(probe: DataFrame, index: DataFrame) -> DataFrame:
-        joined = probe.select(
-            F.col("id").alias("__ia"), F.col("__s").alias("__t")
-        ).join(
-            index.select(
-                F.col("id").alias("__ib"),
-                F.col("__p").alias("__pb"),
-                F.col("__s").alias("__t"),
-            ).hint("shuffle_hash"),
-            on="__t",
-        )
-        # Short-short pairs appear on both probe rows — keep one
-        # orientation at the join (and drop self-pairs); mixed pairs
-        # exist once and are oriented by least/greatest.
-        return (
-            joined.filter(~F.col("__pb") | (F.col("__ia") < F.col("__ib")))
-            .select(
-                F.least("__ia", "__ib").alias("id_a"),
-                F.greatest("__ia", "__ib").alias("id_b"),
-            )
-        )
-
-    cands = pairs_from(ann.filter(cold & F.col("__p")), ann.filter(cold))
-    stats = ann.groupBy("id").agg(
-        F.count(F.lit(1)).alias("__n"),
-        F.count(F.when(~cold, True)).alias("__hc"),
-    )
-    # Same float-ceil completeness slack as _short_exact_cands: only
-    # ever ADMITS more docs into the fallback (verification prunes).
-    hh = stats.filter(
-        F.col("__hc") >= F.ceil(F.lit(threshold) * F.col("__n") - F.lit(1e-6))
-    )
-    hot = ann.filter(~cold).join(
-        hh.select("id").hint("shuffle_hash"), on="id"
-    )
-    fallback = pairs_from(hot.filter("__p"), hot)
-    out = cands.unionByName(fallback)
-    diag = {
-        "hot_shingles": dfreq.filter(F.col("__df") > df_max).select("__s"),
-        "hot_heavy_docs": hh.select("id").dropDuplicates(["id"]),
-    }
-    return out, diag
-
-
-def _short_partner_cands_across(
-    ptok: DataFrame,
-    threshold: float,
-    df_max: int = SHORT_DF_MAX,
-) -> tuple[DataFrame, dict[str, DataFrame]]:
-    """`_short_partner_cands` for the two-corpus single-pass path:
-    ``ptok`` is the side-tagged union's partner-population token rows
-    (__side, id, __p, __s) with ``__p`` true on short docs. Emits only
-    CROSS-side pairs, oriented (id_a = side-0 id, id_b = side-1 id);
-    short-short pairs keep the side-0-probed orientation only (the
-    volume discipline of the self path's id_a < id_b keep rule).
-    Same df-cap + hot-heavy completeness argument, population = both
-    corpora's partner docs.
-    """
-    dfreq = ptok.groupBy("__s").agg(F.count(F.lit(1)).alias("__df"))
-    cold = F.col("__df") <= df_max
-    ann = materialize(
-        ptok.join(dfreq.hint("shuffle_hash"), on="__s"), eager=False
-    )
-
-    def pairs_from(probe: DataFrame, index: DataFrame) -> DataFrame:
-        joined = probe.select(
-            F.col("__side").alias("__sa"),
-            F.col("id").alias("__ia"),
-            F.col("__s").alias("__t"),
-        ).join(
-            index.select(
-                F.col("__side").alias("__sb"),
-                F.col("id").alias("__ib"),
-                F.col("__p").alias("__pb"),
-                F.col("__s").alias("__t"),
-            ).hint("shuffle_hash"),
-            on="__t",
-        )
-        return (
-            joined.filter(F.col("__sa") != F.col("__sb"))
-            .filter(~F.col("__pb") | (F.col("__sa") == 0))
-            .select(
-                F.when(F.col("__sa") == 0, F.col("__ia"))
-                .otherwise(F.col("__ib"))
-                .alias("id_a"),
-                F.when(F.col("__sa") == 0, F.col("__ib"))
-                .otherwise(F.col("__ia"))
-                .alias("id_b"),
-            )
-        )
-
-    cands = pairs_from(ann.filter(cold & F.col("__p")), ann.filter(cold))
-    stats = ann.groupBy("__side", "id").agg(
-        F.count(F.lit(1)).alias("__n"),
-        F.count(F.when(~cold, True)).alias("__hc"),
-    )
-    hh = stats.filter(
-        F.col("__hc") >= F.ceil(F.lit(threshold) * F.col("__n") - F.lit(1e-6))
-    )
-    hot = ann.filter(~cold).join(
-        hh.select("__side", "id").hint("shuffle_hash"), on=["__side", "id"]
-    )
-    fallback = pairs_from(hot.filter("__p"), hot)
-    out = cands.unionByName(fallback)
-    diag = {
-        "hot_shingles": dfreq.filter(F.col("__df") > df_max).select("__s"),
-        "hot_heavy_docs": hh.select("id").dropDuplicates(["id"]),
-    }
-    return out, diag
 
 
 def minhash_pairs_across(
@@ -1029,25 +591,25 @@ def minhash_pairs_across(
     Jaccard >= threshold content overlap, the question continuous
     ingest actually asks before admitting data.
 
-    Same two-phase shape as the self-join path, with both phases
-    two-sided: MinHash-banded candidates come from an equi-join of
-    the two corpora's band keys (the `_band_keys` rule is shared with
-    minhash_lsh_pairs, so the S-curve is identical) — a shuffle on
-    (band, key), linear per side, NEVER |A| x |B|; candidates are
-    then verified with exact shingle Jaccard, so the output equals
-    the all-pairs A x B Jaccard >= threshold set whenever band
-    recall is 1.0 on the data's true pairs. The short-document
-    completeness fix is two-sided too: a pair where EITHER side has
-    <= n_hashes/threshold shingles gets exact candidates from a
-    shingle inverted-index join restricted to those docs.
+    The same pipeline as minhash_verified_pairs, run over the union of
+    both corpora tagged by side: MinHash-banded candidates come from
+    an equi-join of the two corpora's band keys — a shuffle on (band,
+    key), linear per side, NEVER |A| x |B| — and the short-document
+    path covers every cross pair whose smaller side has
+    <= n_hashes/threshold shingles. Candidates are verified with exact
+    shingle Jaccard, so the output equals the all-pairs A x B
+    Jaccard >= threshold set whenever band recall is 1.0 on the data's
+    true pairs.
 
-    Each corpus is shingled ONCE (Arrow UDF + materialize barrier),
-    feeding signatures, the short-doc index, and verification.
+    The id columns may differ in type only when both are integral
+    (byte/short/int/long): they are then joined as long and each
+    output id column keeps its own corpus's declared type. Any other
+    id type mismatch raises ``ValueError`` before any job runs.
     Output: (id_a from existing, id_b from incoming, jaccard) — NOT
     id-ordered: the sides are different tables, so both orientations
     of the same id value are meaningful.
     """
-    _, verified, _ = _across_cands_and_verified(
+    _, verified, _ = _minhash_kernel(
         existing, incoming, text_col, id_col, threshold, n_hashes,
         bands, shingle_n, short_df_max,
     )
@@ -1065,29 +627,32 @@ def minhash_across_counts(
     shingle_n: int = 5,
     short_df_max: int = SHORT_DF_MAX,
 ) -> dict[str, int]:
-    """Scaling diagnostic for the CROSS-corpus path — the
-    minhash_pair_counts discipline applied to the admission check
-    whose short-doc join was the engine's one unbounded-in-skew
-    candidate generator before round 7. Counts candidates, verified
-    pairs, and the short path's volume drivers off one materialized
-    candidate set; at a k-fold corpus with disjoint-replica structure
-    every number must grow ~k-fold."""
-    cands, verified, diag = _across_cands_and_verified(
-        existing, incoming, text_col, id_col, threshold, n_hashes,
-        bands, shingle_n, short_df_max, materialize_cands=True,
+    """minhash_pair_counts for the CROSS-corpus admission check: at a
+    k-fold corpus with disjoint-replica structure every number must
+    grow ~k-fold."""
+    return _kernel_counts(
+        existing, incoming, text_col, id_col, threshold, n_hashes, bands,
+        shingle_n, short_df_max,
     )
+
+
+def _kernel_counts(*args) -> dict[str, int]:
+    """Funnel counts of one _minhash_kernel run, its candidate set
+    materialized so the pair count does not regenerate it."""
+    cands, verified, diag = _minhash_kernel(*args, materialize_cands=True)
     return {
         "candidates": cands.count(),
         "pairs": verified.count(),
-        "short_candidates": diag["short_candidates"].count(),
-        "hot_shingles": diag["hot_shingles"].count(),
-        "hot_heavy_docs": diag["hot_heavy_docs"].count(),
+        **{name: frame.count() for name, frame in diag.items()},
     }
 
 
-def _across_cands_and_verified(
+_INTEGRAL_TYPES = (ByteType, ShortType, IntegerType, LongType)
+
+
+def _minhash_kernel(
     existing: DataFrame,
-    incoming: DataFrame,
+    incoming: DataFrame | None,
     text_col: str,
     id_col: str,
     threshold: float,
@@ -1097,169 +662,275 @@ def _across_cands_and_verified(
     short_df_max: int,
     materialize_cands: bool = False,
 ) -> tuple[DataFrame, DataFrame, dict[str, DataFrame]]:
-    """Shared two-corpus pipeline behind minhash_pairs_across /
-    minhash_across_counts (same split as _minhash_cands_and_verified
-    for the self-join path)."""
+    """The MinHash candidate + verification pipeline behind
+    minhash_verified_pairs, minhash_pairs_across and their counts,
+    over ONE side-tagged shingle frame (__side, id, __sh).
 
-    ea = existing.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t"))
-    eb = incoming.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t"))
+    ``incoming=None`` is the self-join: one side, every row __side 0.
+    Otherwise ``existing`` is side 0 and ``incoming`` side 1, and both
+    share one Arrow shingle pass, one barrier and one signature
+    aggregate. Every stage keys on (__side, id), so equal id values on
+    the two sides never merge.
 
-    # Length-filtered candidate routing (r16, mirroring the self-join
-    # path): any qualifying cross pair with min(|a|,|b|) <= small_max
-    # has max <= small_max/t (Jaccard length filter), so such pairs are
-    # covered EXACTLY by the partner-extended inverted index below and
-    # only docs ABOVE small_max need the signature aggregate and the
-    # band join. Candidates stay a superset of the exact cross-Jaccard
-    # >= t set; the exact verification decides membership either way.
-    small_max = int(n_hashes / max(threshold, 0.1))
-    _sz = F.size("__sh")
-    _is_short = _sz <= small_max
-    _is_partner = (_sz * F.lit(float(threshold))) <= F.lit(small_max + 1e-6)
+    Pair rule, the same for every route: the left row comes from side
+    0, the right row from the last side, and a pair is kept when
+    struct(__side, id) is smaller on the left. For the self-join that
+    is id_a < id_b; across corpora it is id_a from existing, id_b from
+    incoming, each cross pair once.
 
-    single_pass = [f.dataType for f in ea.schema.fields] == [
-        f.dataType for f in eb.schema.fields
-    ]
-    if single_pass:
-        # Single-pass prep (r16): ONE scan + ONE Arrow shingle pass +
-        # ONE materialize barrier + ONE signature aggregate over the
-        # side-tagged union, instead of one of each PER SIDE. When both
-        # inputs slice one table (the registry query: src0 vs the rest)
-        # this halves phase-1 scan/UDF/barrier cost; distinct-table
-        # inputs still scan each table exactly once. Keyed by
-        # (__side, id) everywhere so identical id values on the two
-        # sides can never merge — the two-frame contract allows that.
-        src = spread_input(
-            ea.select(F.lit(0).alias("__side"), "*").unionByName(
-                eb.select(F.lit(1).alias("__side"), "*")
+    ``materialize_cands`` cuts lineage at the candidate set so a
+    counting caller can count candidates AND verified pairs without
+    recomputing candidate generation; the normal path leaves it lazy.
+    Third return value: lazy frames for the short-path canary
+    (short_candidates, hot_shingles, hot_heavy_docs).
+    """
+    sides = [existing] if incoming is None else [existing, incoming]
+    last = len(sides) - 1
+    id_types = [s.select(F.col(id_col)).schema[0].dataType for s in sides]
+    id_type = id_types[0]
+    if id_types[-1] != id_type:
+        if not all(isinstance(t, _INTEGRAL_TYPES) for t in id_types):
+            raise ValueError(
+                f"minhash_pairs_across: id column {id_col!r} is "
+                f"{id_types[0].simpleString()} in existing but "
+                f"{id_types[-1].simpleString()} in incoming; only "
+                "integral id types (byte/short/int/long) can be mixed"
             )
+        id_type = LongType()
+    # Narrow projection first (only side, id and text cross any spread
+    # shuffle), then re-spread when the source scan under-parallelizes
+    # so the Arrow shingle UDF runs on every core (spread_input is a
+    # no-op on an already-parallel scan).
+    src = spread_input(
+        reduce(
+            DataFrame.unionByName,
+            [
+                s.select(
+                    F.lit(side).alias("__side"),
+                    F.col(id_col).cast(id_type).alias("id"),
+                    F.col(text_col).alias("__t"),
+                )
+                for side, s in enumerate(sides)
+            ],
         )
-        shing = materialize(
-            src.select(
-                "__side",
-                "id",
-                word_shingles_arrow(F.col("__t"), shingle_n).alias("__sh"),
-            ),
-            eager=True,
-        )
-        sha = shing.filter(F.col("__side") == 0).select("id", "__sh")
-        shb = shing.filter(F.col("__side") == 1).select("id", "__sh")
-        tok = shing.filter(~_is_short).select(
-            "__side", "id", F.explode("__sh").alias("__s")
-        )
-        # Materialized because BOTH band-join sides derive from it:
-        # left lazy, the full-corpus aggregate would run once per side
-        # — exactly the duplicated work this path exists to remove.
-        sigs = materialize(
-            _signatures_from_tokens(tok, ["__side", "id"], "__s", n_hashes),
-            eager=False,
-        )
-        siga = sigs.filter(F.col("__side") == 0).select("id", "sig")
-        sigb = sigs.filter(F.col("__side") == 1).select("id", "sig")
-    else:
-        # Mixed (id, text) column types: the union would coerce them to
-        # a common type, changing the output id columns' declared types
-        # (and a lossy coercion could conflate distinct ids). Per-side
-        # prep — the pre-r16 shape, one scan/UDF/barrier per side.
-        def prep(df: DataFrame):
-            src = spread_input(df)
-            shing = materialize(
-                src.select(
-                    "id",
-                    word_shingles_arrow(F.col("__t"), shingle_n).alias("__sh"),
-                ),
-                eager=True,
-            )
-            tok = shing.filter(~_is_short).select(
-                "id", F.explode("__sh").alias("__s")
-            )
-            return shing, _signatures_from_tokens(tok, "id", "__s", n_hashes)
-
-        sha, siga = prep(ea)
-        shb, sigb = prep(eb)
-
-    ba = _band_keys(siga, "id", bands).select(
-        F.col("id").alias("id_a"), "band", "key"
     )
-    bb = _band_keys(sigb, "id", bands).select(
-        F.col("id").alias("id_b"), "band", "key"
+    shing = src.select(
+        "__side",
+        "id",
+        word_shingles_arrow(F.col("__t"), shingle_n).alias("__sh"),
+    )
+    # Lazy barrier: the first action to touch this is the eager band-key
+    # checkpoint below, whose lineage reads shing through a SINGLE leg
+    # (tok -> sigs -> band keys) — it computes and stores the shingle
+    # partitions as a side effect, so an eager job here would be pure
+    # scheduling latency. Every later consumer (ptok, the verification
+    # legs) hits the stored partitions. A frame consumed by two legs of
+    # ONE job (keyed) must stay eager — a lazy first action would race
+    # both legs into computing the same partitions.
+    shing = materialize(shing, eager=False)
+    # Length-filtered candidate routing (guide §1.2 "don't compute
+    # what you throw away" + the PPJoin length-filter family):
+    #
+    # * small_max = n_hashes/t is the exact-path population bound: any
+    #   pair the OPH bands can miss has min(|a|,|b|) < n_hashes and
+    #   therefore both sides <= n_hashes/t (Jaccard length filter
+    #   t*|b| <= |a∩b| <= |a|).
+    # * Banding therefore only needs docs ABOVE small_max: a qualifying
+    #   pair with min <= small_max has max <= small_max/t (same length
+    #   filter), so it is covered EXACTLY by the partner-extended
+    #   inverted index below. Every doc below the bound skips the
+    #   signature aggregate and the band join entirely.
+    # * The verified output is invariant: candidates remain a superset
+    #   of the exact Jaccard >= t pair set (per route: above and in
+    #   _short_cands), and the exact verification join rejects
+    #   everything else.
+    small_max = int(n_hashes / max(threshold, 0.1))
+    sz = F.size("__sh")
+    is_short = sz <= small_max
+    # Partner bound, admit-direction slack (cf. the ppjoin ceil slack):
+    # J >= t and |a| <= small_max force t*|b| <= small_max.
+    is_partner = (sz * F.lit(float(threshold))) <= F.lit(small_max + 1e-6)
+    tok = shing.filter(~is_short).select(
+        "__side", "id", F.explode("__sh").alias("__s")
+    )
+    sigs = _signatures_from_tokens(tok, ["__side", "id"], "__s", n_hashes)
+    # Every band collision is a candidate and the exact verifier (not
+    # the signature estimate) decides membership, so only (__side, id,
+    # band, key) crosses the pair join — the 64-long signature array
+    # would be 512 bytes/row of pure shuffle weight (guide §2.3:
+    # project before the exchange). Materialized because both join
+    # sides read it.
+    keyed = materialize(
+        _band_keys(sigs, ["__side", "id"], bands).select(
+            "__side", "id", "band", "key"
+        ),
+        eager=True,
+    )
+    left = keyed.filter(F.col("__side") == 0).select(
+        "band", "key", F.col("__side").alias("__sa"), F.col("id").alias("id_a")
+    )
+    right = keyed.filter(F.col("__side") == last).select(
+        "band", "key", F.col("__side").alias("__sb"), F.col("id").alias("id_b")
     )
     cands = (
-        # Both corpora's band tables are corpus-scaled — shuffle_hash
-        # per the bucket_pairs rule (r16 sf3 canary). Dedup deferred
-        # to the single dropDuplicates after the short-path union.
-        ba.join(bb.hint("shuffle_hash"), on=["band", "key"])
+        # Corpus-scaled both sides — shuffle_hash per the bucket_pairs
+        # rule (never an estimate-based broadcast of a corpus table).
+        # Dedup is deferred to the single dropDuplicates after the
+        # short-path union.
+        left.join(right.hint("shuffle_hash"), on=["band", "key"])
+        .filter(_side_key("__sa", "id_a") < _side_key("__sb", "id_b"))
         .select("id_a", "id_b")
     )
-
-    # Exact candidates for every cross pair whose smaller side is
-    # short, df-capped. The index never touches the other corpus's
-    # FULL token table — only its partner slice (docs any short doc
-    # could reach at Jaccard >= t; one stop-phrase 5-gram shared by a
-    # short doc and 1% of a 100 TB corpus stays bounded by the df cap
-    # + hot-heavy fallback). Token rows re-derive from the
-    # materialized shingle checkpoints with a filter+explode — a
-    # narrow map per side, no extra exchange.
-    if single_pass:
-        ptok = shing.filter(_is_partner).select(
-            "__side", "id", _is_short.alias("__p"),
-            F.explode("__sh").alias("__s"),
-        )
-        short_cands, short_diag = _short_partner_cands_across(
-            ptok, threshold, df_max=short_df_max
-        )
-    else:
-        # Mixed (id, text) types: no tagged union (the coercion
-        # problem above), so cover the three short-involving routes
-        # with two asymmetric calls — (short A x partner B) takes
-        # short-short and short-medium; (medium A x short B) takes the
-        # remaining medium-short. Both orient id_a from the existing
-        # corpus, as the output contract requires.
-        def side_tok(sh: DataFrame, pred) -> DataFrame:
-            return sh.filter(pred).select(
-                "id", F.explode("__sh").alias("__s")
-            )
-
-        c1, d1 = _short_exact_cands(
-            side_tok(sha, _is_short), side_tok(shb, _is_partner),
-            threshold, df_max=short_df_max, symmetric=False, dedup=False,
-        )
-        c2, d2 = _short_exact_cands(
-            side_tok(sha, _is_partner & ~_is_short),
-            side_tok(shb, _is_short),
-            threshold, df_max=short_df_max, symmetric=False, dedup=False,
-        )
-        short_cands = c1.unionByName(c2)
-        short_diag = {
-            "hot_shingles": d1["hot_shingles"]
-            .unionByName(d2["hot_shingles"])
-            .dropDuplicates(["__s"]),
-            "hot_heavy_docs": d1["hot_heavy_docs"]
-            .unionByName(d2["hot_heavy_docs"])
-            .dropDuplicates(["id"]),
-        }
+    # Exact candidates for every pair with min(|a|,|b|) <= small_max.
+    # Token rows re-derive from the materialized shingle checkpoint
+    # with a filter+explode — a narrow map, no extra exchange.
+    ptok = shing.filter(is_partner).select(
+        "__side", "id", is_short.alias("__p"), F.explode("__sh").alias("__s")
+    )
+    short_cands, short_diag = _short_cands(ptok, threshold, last, short_df_max)
     cands = cands.unionByName(short_cands).dropDuplicates(["id_a", "id_b"])
     if materialize_cands:
         cands = materialize(cands, eager=False)
 
-    a = sha.select(F.col("id").alias("id_a"), F.col("__sh").alias("__sha"))
-    b = shb.select(F.col("id").alias("id_b"), F.col("__sh").alias("__shb"))
+    def shingles(side: int, suffix: str) -> DataFrame:
+        return shing.filter(F.col("__side") == side).select(
+            F.col("id").alias(f"id_{suffix}"), F.col("__sh").alias(f"__sh{suffix}")
+        )
+
     inter = F.size(F.array_intersect("__sha", "__shb"))
     union = F.size("__sha") + F.size("__shb") - inter
     jac = inter.cast("double") / union.cast("double")
     verified = (
-        # Per-corpus shingle-array frames — corpus-scaled, never
-        # broadcast-built (bucket_pairs rule).
-        cands.join(a.hint("shuffle_hash"), "id_a")
-        .join(b.hint("shuffle_hash"), "id_b")
-        .select("id_a", "id_b", jac.alias("jaccard"))
+        # The shingle-ARRAY frames are the heaviest corpus-scaled
+        # frames in the plan; never broadcast-built.
+        cands.join(shingles(0, "a").hint("shuffle_hash"), "id_a")
+        .join(shingles(last, "b").hint("shuffle_hash"), "id_b")
+        .select(
+            F.col("id_a").cast(id_types[0]).alias("id_a"),
+            F.col("id_b").cast(id_types[-1]).alias("id_b"),
+            jac.alias("jaccard"),
+        )
         .filter(F.col("jaccard") >= threshold)
     )
-    # Deduped diag frame — keeps the count canary's historic
-    # distinct-pair semantics under the deferred-dedup pipeline.
+    # Deduped diag frame — the count canary reports distinct short-path
+    # candidate pairs, while the pipeline defers dedup to the union.
     return cands, verified, {
         "short_candidates": short_cands.dropDuplicates(["id_a", "id_b"]),
         **short_diag,
     }
+
+
+def _side_key(side_col: str, id_col: str) -> Column:
+    """struct(side, id): the pair rule's ordering key (side first)."""
+    return F.struct(F.col(side_col).alias("side"), F.col(id_col).alias("id"))
+
+
+def _short_cands(
+    ptok: DataFrame,
+    threshold: float,
+    last: int,
+    df_max: int,
+) -> tuple[DataFrame, dict[str, DataFrame]]:
+    """Exact candidate pairs for every qualifying pair whose SMALLER
+    side is short (<= n_hashes/t distinct shingles — the population the
+    OPH bands cannot be trusted with), bounded in corpus skew by a
+    document-frequency cap.
+
+    ``ptok`` holds one row per (__side, id, distinct shingle __s) for
+    the PARTNER population — every doc with t*|doc| <= n_hashes/t, i.e.
+    every doc a short doc could reach at Jaccard >= t (length filter:
+    t*|b| <= |a∩b| <= |a| <= small_max) — with ``__p`` true on the
+    short docs themselves. The probe side of the inverted index is the
+    short rows; the index side is the whole partner population, so a
+    (short, medium) pair is admitted exactly rather than through the
+    short side's degraded OPH signature.
+
+    Why a cap is safe (completeness argument): for Jaccard(A,B) >= t,
+    the shared-shingle count |A∩B| >= t*|A∪B| >= t*max(|A|,|B|), i.e.
+    at least ceil(t*|A|) AND ceil(t*|B|) shingles are shared. The
+    inverted index is restricted to shingles whose document frequency
+    over the partner population is <= df_max; a qualifying pair (A
+    short, B partner) can evade it only if EVERY shared shingle is hot
+    (df > df_max), which by the bound forces hot_count(X) >=
+    ceil(t*|X|) on BOTH sides. Such "hot-heavy" docs are routed to a
+    fallback equi-join on their HOT shingles restricted to the
+    hot-heavy set — so no qualifying pair is lost, while NO path ever
+    joins an uncapped shingle against the full population (joining
+    short-doc shingles against a whole corpus's token table lets one
+    stop-phrase 5-gram shared by a short doc and 1% of a 100 TB corpus
+    become the dominant candidate generator). The df cap bounds any
+    one shingle's index fan-out at df_max^2 pairs. Sub-threshold
+    candidates either path admits are removed by the exact
+    verification downstream.
+
+    Orientation (the kernel's pair rule over struct(__side, id)):
+    short-short pairs appear on both probe rows and keep the one whose
+    probe key is smaller; (short, medium) pairs exist once and are
+    oriented with least/greatest; a pair is then kept only if its
+    smaller key is on side 0 and its larger on side ``last`` (across
+    corpora: cross-side pairs only). Output (id_a, id_b) is raw —
+    duplicates across shared shingles possible — so callers pay one
+    union-level dropDuplicates.
+
+    Returns (candidates, diag) where diag maps canary names to lazy
+    frames (hot shingles, hot-heavy docs) for the count diagnostics.
+    """
+    dfreq = ptok.groupBy("__s").agg(F.count(F.lit(1)).alias("__df"))
+    cold = F.col("__df") <= df_max
+    # One df-annotation join over the partner population's token rows
+    # (dfreq is vocabulary-sized — corpus-scaled, shuffle_hash per the
+    # bucket_pairs rule); probe/index/hot frames are filters over it,
+    # and per-doc totals and hot counts come from a single aggregate.
+    ann = materialize(
+        ptok.join(dfreq.hint("shuffle_hash"), on="__s"), eager=False
+    )
+
+    def pairs_from(probe: DataFrame, index: DataFrame) -> DataFrame:
+        joined = probe.select(
+            F.col("__side").alias("__sa"),
+            F.col("id").alias("__ia"),
+            F.col("__s").alias("__t"),
+        ).join(
+            index.select(
+                F.col("__side").alias("__sb"),
+                F.col("id").alias("__ib"),
+                F.col("__p").alias("__pb"),
+                F.col("__s").alias("__t"),
+            ).hint("shuffle_hash"),
+            on="__t",
+        )
+        ka, kb = _side_key("__sa", "__ia"), _side_key("__sb", "__ib")
+        lo, hi = F.least(ka, kb), F.greatest(ka, kb)
+        return (
+            joined.filter(~F.col("__pb") | (ka < kb))
+            .select(lo.alias("__lo"), hi.alias("__hi"))
+            .filter((F.col("__lo.side") == 0) & (F.col("__hi.side") == last))
+            .select(F.col("__lo.id").alias("id_a"), F.col("__hi.id").alias("id_b"))
+        )
+
+    cands = pairs_from(ann.filter(cold & F.col("__p")), ann.filter(cold))
+    stats = ann.groupBy("__side", "id").agg(
+        F.count(F.lit(1)).alias("__n"),
+        F.count(F.when(~cold, True)).alias("__hc"),
+    )
+    # Float-ceil completeness slack, as in the ppjoin prefix lengths:
+    # double rounding can overshoot an exact-integer t*n and exclude a
+    # boundary doc from the fallback — the one direction that loses
+    # pairs. The slack only ever ADMITS more docs (verification
+    # prunes); it is binary-exact at the shipped t=0.5.
+    hh = stats.filter(
+        F.col("__hc") >= F.ceil(F.lit(threshold) * F.col("__n") - F.lit(1e-6))
+    ).select("__side", "id")
+    # Hot-heavy id lists and hot-token rows can reach corpus scale on a
+    # boilerplate-heavy corpus (every short doc holding one
+    # stop-phrase) — shuffle_hash per the corpus-scaled rule.
+    hot = ann.filter(~cold).join(hh.hint("shuffle_hash"), on=["__side", "id"])
+    fallback = pairs_from(hot.filter("__p"), hot)
+    diag = {
+        "hot_shingles": dfreq.filter(~cold).select("__s"),
+        "hot_heavy_docs": hh,
+    }
+    return cands.unionByName(fallback), diag
 
 
 # ---------------------------------------------------------------------------

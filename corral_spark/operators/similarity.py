@@ -113,8 +113,8 @@ def cosine_near_dup_pairs(
     from corral_spark.operators.dedup import bucket_id_pairs
 
     corpus = _drop_null_vecs(corpus, vec_col)
-    # Two-step candidate/verify (r16, the minhash _banded_cands
-    # pattern): only (band key, id) crosses the pair self-join and its
+    # Two-step candidate/verify (the MinHash kernel's sig-free band
+    # join): only (band key, id) crosses the pair self-join and its
     # barrier — the previous shape shipped each 512-byte vector once
     # per (band x side) through the join; vectors now attach to the
     # (much smaller) candidate set by id for exact verification.
@@ -318,8 +318,8 @@ def semantic_near_dup_pairs(
 
     centroids = deterministic_centroids(corpus, ncells, id_col, vec_col)
     assigned = ivf_assign(corpus, centroids, id_col, vec_col, round_sim=6)
-    # Two-step candidate/verify (r16, the minhash _banded_cands
-    # pattern): only (cell, id) crosses the within-cell pair join —
+    # Two-step candidate/verify (the MinHash kernel's sig-free band
+    # join): only (cell, id) crosses the within-cell pair join —
     # the previous shape shipped each vector once per pair SIDE
     # through the block join (sum-of-squares of cell sizes x 512 B);
     # vectors now attach to the candidate pairs by id.

@@ -102,6 +102,28 @@ def test_capstone_persist_mode_same_rows(spark, mode_conf):
     assert _capstone_rows(spark) == base
 
 
+@pytest.mark.parametrize(
+    "name", ["minhash_pairs_docs", "cross_corpus_near_dups"]
+)
+def test_minhash_queries_same_rows_in_every_mode(spark, tmp_path, mode_conf, name):
+    """The MinHash kernel's three barriers (lazy shingles, eager band
+    keys, lazy df annotation) must give the same pairs whether they
+    are local checkpoints, reliable checkpoints or persisted caches."""
+    from corral_spark.queries import REGISTRY
+
+    def rows():
+        df = REGISTRY[name].spark(spark, SF_DIR)
+        return sorted(map(tuple, df.collect()))
+
+    base = rows()
+    assert base, f"{name} found no pairs at {SF_DIR}"
+    mode_conf.set(CONF_KEY, "checkpoint")
+    mode_conf.set(CHECKPOINT_DIR_KEY, str(tmp_path / "ck"))
+    assert rows() == base
+    mode_conf.set(CONF_KEY, "persist")
+    assert rows() == base
+
+
 def test_connected_components_checkpoint_mode(spark, tmp_path, mode_conf):
     """The iterative operator (deep lineage loop) under reliable
     checkpointing — forced onto the distributed path so the loop's

@@ -297,19 +297,35 @@ def test_deterministic_sample_stable_and_sized(spark, docs):
     assert c <= a
 
 
-def test_minhash_pair_counts_consistent_with_verified_pairs(spark):
+@pytest.mark.parametrize("across", [False, True], ids=["self", "across"])
+def test_minhash_pair_counts_consistent_with_verified_pairs(spark, across):
     """The scaling diagnostic must count the SAME pipeline it reports
-    on: pairs == minhash_verified_pairs row count, candidates >= pairs
-    (verification only ever filters candidates)."""
+    on: pairs == the pair operator's row count, candidates >= pairs
+    (verification only ever filters candidates) — for the self-join
+    and for the cross-corpus check (src0 vs the rest)."""
     from corral_spark.operators.dedup import (
+        minhash_across_counts,
         minhash_pair_counts,
+        minhash_pairs_across,
         minhash_verified_pairs,
     )
     from corral_spark.sources.tables import load_table
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    counts = minhash_pair_counts(docs, "text", "doc_id", threshold=0.5)
-    n_pairs = minhash_verified_pairs(docs, "text", "doc_id", threshold=0.5).count()
+    if across:
+        sides = (
+            docs.filter(F.col("source") == "src0"),
+            docs.filter(F.col("source") != "src0"),
+        )
+        counts = minhash_across_counts(*sides, "text", "doc_id", threshold=0.5)
+        n_pairs = minhash_pairs_across(
+            *sides, "text", "doc_id", threshold=0.5
+        ).count()
+    else:
+        counts = minhash_pair_counts(docs, "text", "doc_id", threshold=0.5)
+        n_pairs = minhash_verified_pairs(
+            docs, "text", "doc_id", threshold=0.5
+        ).count()
     assert counts["pairs"] == n_pairs
     assert counts["candidates"] >= counts["pairs"]
 

@@ -563,12 +563,15 @@ def test_length_routed_candidates_match_bruteforce(spark):
 
 
 def test_across_length_routing_mixed_id_types(spark):
-    """The two-corpus PER-SIDE branch (mixed id dtypes force it) under
-    the r16 length routing: its exact path is two asymmetric calls
-    (short-A x partner-B, medium-A x short-B) and only docs above
+    """Mixed integral id dtypes (int existing, long incoming) under the
+    length routing: the ids are joined as long, the exact path covers
+    short-A x partner-B and medium-A x short-B, and only docs above
     small_max are banded. Output must equal TRUE cross-corpus Jaccard,
     including a short-A x medium-B pair and a medium-A x short-B pair
-    that banding no longer covers."""
+    that banding does not cover, and each output id column must keep
+    its own corpus's declared type."""
+    from pyspark.sql.types import IntegerType, LongType
+
     from corral_spark.operators.dedup import minhash_pairs_across
 
     a_texts = _length_mix_docs("a")
@@ -590,12 +593,12 @@ def test_across_length_routing_mixed_id_types(spark):
     b = spark.createDataFrame(
         list(b_texts.items()), "doc_id long, text string"
     )
-    got = {
-        (r["id_a"], r["id_b"])
-        for r in minhash_pairs_across(
-            a, b, "text", "doc_id", threshold=0.5, shingle_n=1
-        ).collect()
-    }
+    out = minhash_pairs_across(
+        a, b, "text", "doc_id", threshold=0.5, shingle_n=1
+    )
+    assert out.schema["id_a"].dataType == IntegerType()
+    assert out.schema["id_b"].dataType == LongType()
+    got = {(r["id_a"], r["id_b"]) for r in out.collect()}
     want = set()
     all_pairs = _brute_jaccard_pairs({**a_texts, **{k + 100: v for k, v in b_texts.items()}}, n=1)
     for (x, y) in all_pairs:
@@ -604,3 +607,77 @@ def test_across_length_routing_mixed_id_types(spark):
             want.add((lo, hi - 100))
     assert any(p[0] == 0 for p in want)  # short-A has cross partners
     assert got == want
+
+
+def test_across_mismatched_id_types_raise_before_any_job(spark):
+    """A non-integral id type mismatch cannot be joined without a lossy
+    coercion, so it raises ValueError naming both types — at plan
+    construction, before any Spark job runs."""
+    import pytest
+
+    from corral_spark.operators.dedup import minhash_pairs_across
+
+    a = spark.createDataFrame([("a0", "alpha beta")], "doc_id string, text string")
+    b = spark.createDataFrame([(0, "alpha beta")], "doc_id long, text string")
+    sc = spark.sparkContext
+    sc.setJobGroup("mixed-id-raise", "mixed-id-raise")
+    try:
+        with pytest.raises(ValueError, match="string.*bigint"):
+            minhash_pairs_across(a, b, "text", "doc_id")
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(sc.statusTracker().getJobIdsForGroup("mixed-id-raise")) == []
+
+
+def test_across_overlapping_ids_match_bruteforce(spark):
+    """Both corpora use the SAME id values (0..5), so any stage keyed on
+    id without the side tag would merge two documents or pair a doc
+    with its own corpus. Planted: a true cross pair (i, i), a cross
+    pair (i, j), a long cross pair that only the bands cover, hot-only
+    pairs (the stop phrase is hot at short_df_max=2), and a same-side
+    near-dup on each side that must not appear."""
+    from corral_spark.operators.dedup import minhash_pairs_across
+
+    stop = "click here to subscribe now"
+    long_words = [f"lw{i}" for i in range(200)]
+    a_texts = {
+        0: "alpha beta gamma delta epsilon zeta eta theta",
+        1: stop,
+        2: "lorem ipsum dolor sit amet consectetur adipiscing elit",
+        3: f"{stop} atail1 atail2 atail3",
+        4: "lorem ipsum dolor sit amet consectetur adipiscing elit sed",
+        5: " ".join(long_words),
+    }
+    b_texts = {
+        0: "alpha beta gamma delta epsilon zeta eta iota",
+        1: f"{stop} btail1 btail2 btail3",
+        2: "pack my box with five dozen liquor jugs today",
+        3: stop,
+        4: "pack my box with five dozen liquor jugs tonight",
+        5: " ".join(long_words[:190] + [f"lx{i}" for i in range(10)]),
+    }
+    a = spark.createDataFrame(list(a_texts.items()), "doc_id long, text string")
+    b = spark.createDataFrame(list(b_texts.items()), "doc_id long, text string")
+    rows = minhash_pairs_across(
+        a, b, "text", "doc_id", threshold=0.5, short_df_max=2
+    ).collect()
+    got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in rows}
+    # One row per pair, scored against the right side's document: a
+    # verification join on id alone would also match the same id on
+    # the other side.
+    assert len(rows) == len(got)
+    assert got[(0, 0)] == 3 / 5
+    want = set()
+    all_pairs = _brute_jaccard_pairs(
+        {**a_texts, **{k + 100: v for k, v in b_texts.items()}}
+    )
+    for (x, y) in all_pairs:
+        if x < 100 <= y:  # cross-corpus only
+            want.add((x, y - 100))
+    assert (0, 0) in want  # cross pair with equal ids
+    assert (1, 3) in want  # cross pair, hot-heavy fallback only
+    assert (5, 5) in want  # long cross pair, banded only
+    assert (2, 4) in all_pairs and (102, 104) in all_pairs  # same-side
+    assert (2, 4) not in want and (2, 2) not in want
+    assert set(got) == want
+

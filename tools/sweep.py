@@ -62,7 +62,7 @@ def main() -> None:
             # clearCache() does not unpersist localCheckpoint blocks
             # (materialize's default mode) — drop them explicitly so
             # storage from earlier queries can't skew later timings
-            # (same fix as profile_minhash._clear_storage; judge r9).
+            # (same fix as bench._clear_storage).
             for rdd in (
                 spark.sparkContext._jsc.getPersistentRDDs().values()
             ):
