@@ -27,6 +27,15 @@ def tokenize(col: Column) -> Column:
     return F.filter(words, lambda w: w != "")
 
 
+def split_words(text: Column) -> Column:
+    """Whitespace words via single-space split: the corpus tokenizer of
+    the text-hygiene and text-analysis operators (documents are single-
+    space separated; the rule is mirrored verbatim in oracle SQL as
+    ``list_filter(string_split(text, ' '), x -> x <> '')``). Unlike
+    ``tokenize`` it keeps case and punctuation."""
+    return F.filter(F.split(text, " "), lambda w: w != "")
+
+
 def substr_prefix(col: Column, n: int) -> Column:
     """First ``n`` chars, clamped to string length — the reference's
     ``sourceIP[:min(8, len(sourceIP))]`` group key (amplab2.go:29-31).

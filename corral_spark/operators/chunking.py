@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from corral_spark.functions.text import tokenize
+from corral_spark.functions.text import split_words, tokenize
 
 
 def chunk_documents(
@@ -136,7 +136,7 @@ def content_defined_chunks(
     if window_k < 1 or divisor < 1:
         raise ValueError("need window_k >= 1 and divisor >= 1")
     k = window_k
-    words_expr = F.filter(F.split(F.col(text_col), " "), lambda w: w != "")
+    words_expr = split_words(F.col(text_col))
     # Stage words and cut positions as REAL columns across separate
     # projections. Spark expressions are trees, not DAGs: had the
     # chunk-slice transform referenced the bpos EXPRESSION, every

@@ -38,7 +38,11 @@ from pyspark.sql.types import (
 )
 from pyspark.sql.window import Window
 
-from corral_spark.functions.text import _NON_ALNUM as _NON_ALNUM_RE, tokenize
+from corral_spark.functions.text import (
+    _NON_ALNUM as _NON_ALNUM_RE,
+    split_words,
+    tokenize,
+)
 from corral_spark.materialize import materialize
 
 
@@ -1045,6 +1049,101 @@ def simhash_pairs(
     )
 
 
+# ---------------------------------------------------------------------------
+# Text hygiene: segment dedup, boilerplate removal, sliding-gram dedup
+# ---------------------------------------------------------------------------
+#
+# One implementation per operator, over a words frame ``(__id, __w
+# array<string>)``. The public operators tokenize once into that frame
+# (``_words_base``), run a core, and rebuild the text contract in
+# ``_text_contract``; ``prepare_pretraining_corpus`` chains the same
+# cores on its own words frame without reassembling text in between.
+# Every core returns ``(__id, __w, n_kept, n_total)``: ``__w`` the kept
+# words, ``n_kept``/``n_total`` in the operator's own unit (segments for
+# the segment operators, tokens for sliding-gram dedup).
+
+
+def _size_or_null(arr: Column) -> Column:
+    """``size`` that is NULL for a NULL array in every session:
+    ``size(NULL)`` is -1 in legacy mode and NULL under ANSI."""
+    return F.when(arr.isNotNull(), F.size(arr))
+
+
+def _words_base(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """The ``(__id, __w)`` words frame of a text input, lazily
+    checkpointed: every core reads it twice (the segment/window explode
+    and the final id join), so documents are tokenized once.
+    spread_input first: the explodes downstream must not fan out from a
+    1-split scan's single task (no-op on an already-parallel input)."""
+    return materialize(
+        spread_input(df.select(F.col(id_col), F.col(text_col))).select(
+            F.col(id_col).alias("__id"),
+            split_words(F.col(text_col)).alias("__w"),
+        ),
+        eager=False,
+    )
+
+
+def _text_contract(kept: DataFrame, id_col: str) -> DataFrame:
+    """A core's output as the public ``(id_col, clean_text, n_kept,
+    n_total)`` contract. The single-space join of the kept words
+    equals the join of the kept segments, since segments are
+    single-space joins of non-empty words."""
+    return kept.select(
+        F.col("__id").alias(id_col),
+        F.concat_ws(" ", "__w").alias("clean_text"),
+        "n_kept",
+        "n_total",
+    )
+
+
+def _segment_keep_words(
+    base: DataFrame, seg_words: int, kept_segments
+) -> DataFrame:
+    """Segment scaffold shared by ``segment_dedup`` and boilerplate
+    removal: split every document into fixed-width ``seg_words``
+    segments, let ``kept_segments`` pick the surviving ``(__id,
+    seg_idx)`` rows from the exploded ``(__id, seg_idx, seg)`` frame,
+    and keep the words of those segments in original order. NULL and
+    empty documents have no segments and keep nothing (n_total 0).
+
+    Only the surviving (id, idx) INTS ride the doc-keyed exchanges;
+    the words are re-read from the checkpointed ``__w`` array at the
+    final join (shuffle keys, not payloads)."""
+    w = F.col("__w")
+    n = _size_or_null(w)
+    nseg = F.ceil(n / F.lit(seg_words)).cast("int")
+    segs = F.when(
+        n > 0,
+        F.transform(
+            F.sequence(F.lit(0), nseg - 1),
+            lambda j: F.concat_ws(" ", F.slice(w, j * seg_words + 1, seg_words)),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+    exploded = base.select("__id", F.posexplode(segs).alias("seg_idx", "seg"))
+    kept_idx = (
+        kept_segments(exploded)
+        .groupBy("__id")
+        .agg(F.array_sort(F.collect_list("seg_idx")).alias("__kp"))
+    )
+    kept = F.col("__kp").isNotNull()
+    kept_words = F.flatten(
+        F.transform(
+            F.col("__kp"), lambda j: F.slice(w, j * seg_words + 1, seg_words)
+        )
+    )
+    # kept_idx is doc-scale — corpus-scaled, never an estimate-based
+    # broadcast build (bucket_pairs rule).
+    return base.join(kept_idx.hint("shuffle_hash"), on="__id", how="left").select(
+        "__id",
+        F.when(kept, kept_words)
+        .otherwise(F.array().cast("array<string>"))
+        .alias("__w"),
+        F.when(kept, F.size("__kp")).otherwise(F.lit(0)).alias("n_kept"),
+        F.coalesce(nseg, F.lit(0)).alias("n_total"),
+    )
+
+
 def segment_dedup(
     df: DataFrame,
     text_col: str,
@@ -1073,106 +1172,163 @@ def segment_dedup(
     Output: (id_col, clean_text, n_kept, n_total) ordered by nothing —
     callers order.
     """
-    words = F.filter(F.split(F.col(text_col), " "), lambda w: w != "")
-    nseg = F.ceil(F.size(words) / F.lit(seg_words)).cast("int")
-    segs = F.when(
-        F.size(words) > 0,
-        F.transform(
-            F.sequence(F.lit(0), nseg - 1),
-            lambda j: F.concat_ws(
-                " ", F.slice(words, j * seg_words + 1, seg_words)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
 
-    # Two consumers below (the posexplode branch and the final n_total
-    # join) — materialize so documents are tokenized/segmented once.
-    # spread_input first: tokenize+segment must not serialize on a
-    # 1-split scan (no-op on an already-parallel input).
-    base = materialize(
-        spread_input(df.select(F.col(id_col), F.col(text_col))).select(
-            F.col(id_col).alias("__id"),
-            segs.alias("__segs"),
-            nseg.alias("n_total"),
-        ),
-        eager=False,
-    )
-    exploded = base.select(
-        "__id", F.posexplode("__segs").alias("seg_idx", "seg")
-    )
-    # First occurrence = min (doc id, seg idx) — a hash aggregate with
-    # map-side combine, deliberately NOT a row_number window (windows
-    # shuffle every occurrence of a hot segment to one task).
-    # Winner = min (doc id, seg idx) per distinct segment; only the
-    # (id, idx) INTS ride the doc-keyed exchanges — the segment text
-    # is re-read from the checkpointed __segs array at the final join
-    # (r16: previously the text payload crossed the rebuild groupBy
-    # AND the final join; guide §2.3 "shuffle keys, not payloads").
-    kept_idx = (
-        exploded.groupBy("seg")
-        .agg(F.min(F.struct("__id", "seg_idx")).alias("__w"))
-        .select(
-            F.col("__w.__id").alias("__id"),
-            F.col("__w.seg_idx").alias("seg_idx"),
+    def first_occurrences(exploded: DataFrame) -> DataFrame:
+        # A hash aggregate with map-side combine, deliberately NOT a
+        # row_number window (windows shuffle every occurrence of a hot
+        # segment to one task).
+        return (
+            exploded.groupBy("seg")
+            .agg(F.min(F.struct("__id", "seg_idx")).alias("__f"))
+            .select(
+                F.col("__f.__id").alias("__id"),
+                F.col("__f.seg_idx").alias("seg_idx"),
+            )
         )
-        .groupBy("__id")
-        .agg(F.array_sort(F.collect_list("seg_idx")).alias("__kp"))
+
+    base = _words_base(df, text_col, id_col)
+    return _text_contract(
+        _segment_keep_words(base, seg_words, first_occurrences), id_col
     )
-    rebuilt = F.concat_ws(
-        " ",
-        F.transform(
-            F.col("__kp"), lambda j: F.element_at(F.col("__segs"), j + 1)
-        ),
-    )
-    # kept_idx is doc-scale — corpus-scaled, never an estimate-based
-    # broadcast build (bucket_pairs rule).
-    return (
-        base.join(kept_idx.hint("shuffle_hash"), on="__id", how="left")
-        .select(
-            F.col("__id").alias(id_col),
-            F.when(F.col("__kp").isNotNull(), rebuilt)
-            .otherwise(F.lit(""))
-            .alias("clean_text"),
-            # size(NULL) is -1 in legacy mode and NULL under ANSI —
-            # branch on the null explicitly so both sessions agree.
-            F.when(F.col("__kp").isNotNull(), F.size("__kp"))
-            .otherwise(F.lit(0))
-            .alias("n_kept"),
-            F.coalesce(F.col("n_total"), F.lit(0)).alias("n_total"),
+
+
+def _boilerplate_keep_words(
+    base: DataFrame,
+    seg_words: int = 10,
+    max_df: int = 2,
+    broadcast_rows: int = 500_000,
+) -> DataFrame:
+    """Boilerplate-removal core over a words frame (see
+    ``remove_boilerplate_segments``): drop every segment whose text
+    appears in more than ``max_df`` distinct documents."""
+
+    def not_hot(exploded: DataFrame) -> DataFrame:
+        hot = materialize(
+            exploded.groupBy("seg")
+            .agg(F.count_distinct("__id").alias("__df"))
+            .filter(F.col("__df") > max_df)
+            .select("seg"),
+            eager=False,
         )
+        # Counted broadcast gate: the hot set is the Zipf head (usually
+        # small) but grows with corpus size / shrinking max_df — never
+        # an unconditional broadcast.
+        hot_side = hot if hot.count() > broadcast_rows else F.broadcast(hot)
+        # The anti-join keys on the segment text — that is the join's
+        # semantics.
+        return exploded.join(hot_side, on="seg", how="left_anti")
+
+    return _segment_keep_words(base, seg_words, not_hot)
+
+
+def remove_boilerplate_segments(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    seg_words: int = 10,
+    max_df: int = 2,
+    broadcast_rows: int = 500_000,
+) -> DataFrame:
+    """Boilerplate removal (C4/CCNet-style): drop EVERY copy of any
+    fixed-width word segment that appears in more than ``max_df``
+    distinct documents; segments at or below the ceiling keep all
+    their copies. Complements ``segment_dedup`` (first-occurrence-
+    wins): dedup keeps one copy of repeated content, boilerplate
+    removal decides repeated-enough content is template noise and
+    keeps none.
+
+    Scale shape: one partial-aggregated document-frequency count over
+    segments, then the hot set (df > max_df — usually small: it is
+    the Zipf head, i.e. the boilerplate) feeds a left_anti join on the
+    exploded segments. The hot set is COUNTED first and only
+    broadcast when it has at most ``broadcast_rows`` rows (~10-word
+    segments ≈ tens of MB at the default ceiling); above that it
+    grows with corpus size / shrinking ``max_df`` and an unconditional
+    broadcast hint would OOM the driver or blow the broadcast ceiling
+    on a 100 TB run, so the guard falls back to a plain shuffle
+    anti-join (same counted-threshold discipline as the textanalysis
+    model joins). The count itself is one extra job over the
+    already-materialized segment-frequency aggregate, amortized across
+    the corpus-sized anti-join it protects. Reassembly is the same
+    doc-keyed group-by as segment_dedup.
+
+    Output: (id_col, clean_text, n_kept, n_total), row-complete.
+    """
+    base = _words_base(df, text_col, id_col)
+    return _text_contract(
+        _boilerplate_keep_words(base, seg_words, max_df, broadcast_rows), id_col
     )
 
 
-def _gram_windows(df: DataFrame, text_col: str, id_col: str, k: int):
-    """(base, wins) shared by ``sliding_gram_dedup`` and its
-    linearity canary ``gram_dedup_counts``: base = (__id, __w words
-    array, n_total), lazily checkpointed (multiple consumers in the
-    dedup path); wins = one row per sliding k-word window (__id, pos,
-    gram). ONE definition on purpose — the canary certifies the
-    intermediates of the plan the operator actually runs, so the
-    tokenizer/window rule must not be able to drift between them."""
-    words = F.filter(F.split(F.col(text_col), " "), lambda w: w != "")
-    # spread_input: the window explode downstream is the largest
-    # intermediate in the engine — it must not fan out from a 1-split
-    # scan's single task (no-op on an already-parallel input).
-    base = materialize(
-        spread_input(df.select(F.col(id_col), F.col(text_col))).select(
-            F.col(id_col).alias("__id"),
-            words.alias("__w"),
-            F.size(words).cast("int").alias("n_total"),
-        ),
-        eager=False,
-    )
-    wins = base.filter(F.col("n_total") >= k).select(
+def _gram_windows(base: DataFrame, k: int) -> DataFrame:
+    """One row per sliding k-word window ``(__id, pos, gram)`` of a
+    words frame. Shared by the sliding-gram core and its linearity
+    canary ``gram_dedup_counts``, so the canary counts the windows the
+    operator actually builds. NULL and shorter-than-k documents have
+    no windows."""
+    n = _size_or_null(F.col("__w"))
+    return base.filter(n >= k).select(
         "__id",
         F.posexplode(
             F.transform(
-                F.sequence(F.lit(0), F.col("n_total") - k),
+                F.sequence(F.lit(0), n - k),
                 lambda j: F.concat_ws(" ", F.slice(F.col("__w"), j + 1, k)),
             )
         ).alias("pos", "gram"),
     )
-    return base, wins
+
+
+def _gram_keep_words(base: DataFrame, k: int = 8) -> DataFrame:
+    """Sliding-gram dedup core over a words frame (see
+    ``sliding_gram_dedup``). Docs shorter than ``k`` keep every token;
+    docs whose every window was seen earlier keep none; NULL docs keep
+    nothing and report n_total NULL."""
+    firsts = _gram_windows(base, k).groupBy("gram").agg(
+        F.min(F.struct(F.col("__id"), F.col("pos"))).alias("__f")
+    )
+    # Winner rows per doc: at most n-k+1 ints/doc, totalling one row
+    # per DISTINCT gram corpus-wide — the smallest frame in the
+    # pipeline. Only these ints cross the doc-keyed exchanges.
+    keep_pos = (
+        firsts.select(
+            F.col("__f.__id").alias("__id"), F.col("__f.pos").alias("pos")
+        )
+        .groupBy("__id")
+        .agg(F.collect_list("pos").alias("__kp"))
+    )
+    # Kept token positions = union of the k-wide intervals of the
+    # doc's first-occurrence windows. Per-doc array work only.
+    kept_pos = F.array_sort(
+        F.array_distinct(
+            F.flatten(
+                F.transform(
+                    F.col("__kp"),
+                    lambda p: F.sequence(p, p + F.lit(k - 1)),
+                )
+            )
+        )
+    )
+    n_total = _size_or_null(F.col("__w"))
+    short = n_total < k
+    won = F.col("__kp").isNotNull()
+    # keep_pos is doc-scale — corpus-scaled, never an estimate-based
+    # broadcast build (bucket_pairs rule); the words-array payload
+    # crosses only this one exchange.
+    return base.join(keep_pos.hint("shuffle_hash"), on="__id", how="left").select(
+        "__id",
+        F.when(short, F.col("__w"))
+        .when(
+            won,
+            F.transform(kept_pos, lambda i: F.element_at(F.col("__w"), i + 1)),
+        )
+        .otherwise(F.array().cast("array<string>"))
+        .alias("__w"),
+        F.when(short, n_total)
+        .when(won, F.size(kept_pos))
+        .otherwise(F.lit(0))
+        .alias("n_kept"),
+        n_total.alias("n_total"),
+    )
 
 
 def sliding_gram_dedup(
@@ -1202,70 +1358,17 @@ def sliding_gram_dedup(
     and the first-occurrence windows are exactly the min-winners —
     so the kept positions of a doc are the union of [pos, pos+k-1]
     over ITS winner rows, computed as an array expression against the
-    checkpointed words array. (r16: this replaced a second window
-    explode, a gram-keyed occurrence join, a k-way coverage explode —
-    previously the largest intermediate in the engine — a (doc, pos)
-    aggregate, a token-scale anti-join and a token collect_list; the
-    word payload now crosses exactly ONE exchange, the final doc join,
-    per guide §8 "move heavy rows once".) No windows over the corpus,
-    no all-pairs, no driver-side state.
+    checkpointed words array. The rebuild needs no second window
+    explode, no gram-keyed occurrence join, no k-way coverage explode
+    and no token-scale anti-join, and the word payload crosses exactly
+    ONE exchange, the final doc join ("move heavy rows once"). No
+    windows over the corpus, no all-pairs, no driver-side state.
 
-    Output: (id_col, clean_text, n_kept, n_total), row-complete.
+    Output: (id_col, clean_text, n_kept, n_total), row-complete;
+    n_kept and n_total count tokens (n_total is NULL for NULL text).
     """
-    base, wins = _gram_windows(df, text_col, id_col, k)
-    firsts = wins.groupBy("gram").agg(
-        F.min(F.struct(F.col("__id"), F.col("pos"))).alias("__f")
-    )
-    # Winner rows per doc: at most n-k+1 ints/doc, totalling one row
-    # per DISTINCT gram corpus-wide — the smallest frame in the
-    # pipeline. Only these ints cross the doc-keyed exchanges.
-    keep_pos = (
-        firsts.select(
-            F.col("__f.__id").alias("__id"), F.col("__f.pos").alias("pos")
-        )
-        .groupBy("__id")
-        .agg(F.collect_list("pos").alias("__kp"))
-    )
-    # Kept token positions = union of the k-wide intervals of the
-    # doc's first-occurrence windows; docs shorter than k never enter
-    # wins and keep every token. Per-doc array work only.
-    kept_pos = F.array_sort(
-        F.array_distinct(
-            F.flatten(
-                F.transform(
-                    F.col("__kp"),
-                    lambda p: F.sequence(p, p + F.lit(k - 1)),
-                )
-            )
-        )
-    )
-    rebuilt = F.concat_ws(
-        " ",
-        F.transform(kept_pos, lambda i: F.element_at(F.col("__w"), i + 1)),
-    )
-    short = F.col("n_total") < k
-    # keep_pos is doc-scale — corpus-scaled, never an estimate-based
-    # broadcast build (bucket_pairs rule); the words-array payload
-    # crosses only this one exchange.
-    return (
-        base.join(keep_pos.hint("shuffle_hash"), on="__id", how="left")
-        .select(
-            F.col("__id").alias(id_col),
-            F.when(short, F.concat_ws(" ", F.col("__w")))
-            .otherwise(
-                F.when(F.col("__kp").isNotNull(), rebuilt).otherwise(F.lit(""))
-            )
-            .alias("clean_text"),
-            F.when(short, F.col("n_total"))
-            .otherwise(
-                F.when(F.col("__kp").isNotNull(), F.size(kept_pos)).otherwise(
-                    F.lit(0)
-                )
-            )
-            .alias("n_kept"),
-            F.col("n_total"),
-        )
-    )
+    base = _words_base(df, text_col, id_col)
+    return _text_contract(_gram_keep_words(base, k), id_col)
 
 
 def gram_dedup_counts(
@@ -1277,18 +1380,18 @@ def gram_dedup_counts(
 
     ``windows`` is the sliding-window explode row count (one row per
     k-gram occurrence); ``coverage_rows`` is ``windows * k`` by
-    construction — the volume of the k-way coverage explode the
-    pre-r16 operator materialized (r16 replaced it with the per-doc
-    interval-union rebuild; the counter is kept for cross-round
-    comparability and still tracks the same corpus property);
+    construction — the volume of the k-way coverage explode an
+    earlier version of the operator materialized (the interval-union
+    rebuild replaced it; the counter is kept for comparability with
+    older measurements and still tracks the same corpus property);
     ``distinct_grams`` is the vocabulary the min-winner aggregate
     shuffles. On a disjoint-replica 10x corpus all three must grow
     ~10x — any superlinear ratio is an engine artifact, not noise.
 
-    Shares ``_gram_windows`` with the operator itself, so the canary
-    cannot drift from the construction it certifies.
+    Counts the core's own ``_gram_windows`` over the same words base,
+    so the canary cannot drift from the construction it certifies.
     """
-    _base, wins = _gram_windows(df, text_col, id_col, k)
+    wins = _gram_windows(_words_base(df, text_col, id_col), k)
     agg = wins.agg(
         F.count(F.lit(1)).alias("windows"),
         F.count_distinct("gram").alias("distinct_grams"),
@@ -1300,241 +1403,9 @@ def gram_dedup_counts(
     }
 
 
-def remove_boilerplate_segments(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    seg_words: int = 10,
-    max_df: int = 2,
-    broadcast_rows: int = 500_000,
-) -> DataFrame:
-    """Boilerplate removal (C4/CCNet-style): drop EVERY copy of any
-    fixed-width word segment that appears in more than ``max_df``
-    distinct documents; segments at or below the ceiling keep all
-    their copies. Complements ``segment_dedup`` (first-occurrence-
-    wins): dedup keeps one copy of repeated content, boilerplate
-    removal decides repeated-enough content is template noise and
-    keeps none.
-
-    Scale shape: one partial-aggregated document-frequency count over
-    segments, then the hot set (df > max_df — usually small: it is
-    the Zipf head, i.e. the boilerplate) feeds a left_anti join on the
-    exploded segments. The hot set is COUNTED first and only
-    broadcast when it has at most ``broadcast_rows`` rows (~10-word
-    segments ≈ tens of MB at the default ceiling); above that it
-    grows with corpus size / shrinking ``max_df`` and an unconditional
-    broadcast hint would OOM the driver or blow the broadcast ceiling
-    on a 100 TB run, so the guard falls back to a plain shuffle
-    anti-join (r4 verdict item 2 — same counted-threshold discipline
-    as the textanalysis model joins). The count itself is one extra
-    job over the already-materialized segment-frequency aggregate,
-    amortized across the corpus-sized anti-join it protects.
-    Reassembly is the same doc-keyed group-by as segment_dedup.
-
-    Output: (id_col, clean_text, n_kept, n_total), row-complete.
-    """
-    words = F.filter(F.split(F.col(text_col), " "), lambda w: w != "")
-    nseg = F.ceil(F.size(words) / F.lit(seg_words)).cast("int")
-    segs = F.when(
-        F.size(words) > 0,
-        F.transform(
-            F.sequence(F.lit(0), nseg - 1),
-            lambda j: F.concat_ws(
-                " ", F.slice(words, j * seg_words + 1, seg_words)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-    # spread_input: tokenize+segment must not serialize on a 1-split
-    # scan (no-op on an already-parallel input).
-    base = materialize(
-        spread_input(df.select(F.col(id_col), F.col(text_col))).select(
-            F.col(id_col).alias("__id"),
-            segs.alias("__segs"),
-            nseg.alias("n_total"),
-        ),
-        eager=False,
-    )
-    exploded = base.select(
-        "__id", F.posexplode("__segs").alias("seg_idx", "seg")
-    )
-    hot = materialize(
-        exploded.groupBy("seg")
-        .agg(F.count_distinct("__id").alias("__df"))
-        .filter(F.col("__df") > max_df)
-        .select("seg"),
-        eager=False,
-    )
-    hot_side = hot if hot.count() > broadcast_rows else F.broadcast(hot)
-    # Survivor (id, idx) INTS only ride the doc-keyed exchanges; the
-    # segment text is re-read from the checkpointed __segs array at
-    # the final join (r16: previously the text payload crossed the
-    # rebuild groupBy AND the final join; guide §2.3 "shuffle keys,
-    # not payloads"). The anti-join itself still keys on the segment
-    # text — that is the join's semantics.
-    kept_idx = (
-        exploded.join(hot_side, on="seg", how="left_anti")
-        .groupBy("__id")
-        .agg(F.array_sort(F.collect_list("seg_idx")).alias("__kp"))
-    )
-    rebuilt = F.concat_ws(
-        " ",
-        F.transform(
-            F.col("__kp"), lambda j: F.element_at(F.col("__segs"), j + 1)
-        ),
-    )
-    # kept_idx is doc-scale — corpus-scaled, never an estimate-based
-    # broadcast build (bucket_pairs rule).
-    return (
-        base.join(kept_idx.hint("shuffle_hash"), on="__id", how="left")
-        .select(
-            F.col("__id").alias(id_col),
-            F.when(F.col("__kp").isNotNull(), rebuilt)
-            .otherwise(F.lit(""))
-            .alias("clean_text"),
-            # size(NULL) is -1 in legacy mode and NULL under ANSI —
-            # branch on the null explicitly so both sessions agree.
-            F.when(F.col("__kp").isNotNull(), F.size("__kp"))
-            .otherwise(F.lit(0))
-            .alias("n_kept"),
-            F.coalesce(F.col("n_total"), F.lit(0)).alias("n_total"),
-        )
-    )
-
-
-def _boilerplate_keep_words(
-    base: DataFrame,
-    seg_words: int = 10,
-    max_df: int = 2,
-    broadcast_rows: int = 500_000,
-) -> DataFrame:
-    """Private words-array seam of ``remove_boilerplate_segments`` for
-    the pretrain pipeline (r16 verdict item 1 — guide §2.4 "don't
-    recompute across stages"): the public operator takes/returns TEXT,
-    so composing it with ``sliding_gram_dedup`` re-splits the exact
-    string the previous stage just reassembled with ``concat_ws``.
-    This variant takes a MATERIALIZED ``(__id, __w array<string>)``
-    frame and returns ``(__id, __w)`` with the surviving words — same
-    hot-segment semantics, zero text reassembly/re-tokenization.
-
-    Equivalence to the public operator (proven exceptAll-identical in
-    tests/test_pretrain_fusion.py and by the pipeline-level fused-vs-
-    unfused exceptAll at two SFs): the segment strings built here are
-    the same ``concat_ws(" ", slice(words, ...))`` values, the hot set
-    is the same count_distinct/max_df rule with the same counted
-    broadcast gate, and the public rebuild
-    ``concat_ws(" ", kept segments)`` equals
-    ``concat_ws(" ", flatten(kept word slices))`` because segments are
-    single-space joins of non-empty words. Callers must pass a frame
-    that is already materialized/parallel (the pipeline's head spread
-    + checkpoint); the output is NOT materialized.
-    """
-    w = F.col("__w")
-    nseg = F.ceil(F.size(w) / F.lit(seg_words)).cast("int")
-    segs = F.when(
-        F.size(w) > 0,
-        F.transform(
-            F.sequence(F.lit(0), nseg - 1),
-            lambda j: F.concat_ws(" ", F.slice(w, j * seg_words + 1, seg_words)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    exploded = base.select(
-        "__id", F.posexplode(segs).alias("seg_idx", "seg")
-    )
-    hot = materialize(
-        exploded.groupBy("seg")
-        .agg(F.count_distinct("__id").alias("__df"))
-        .filter(F.col("__df") > max_df)
-        .select("seg"),
-        eager=False,
-    )
-    # Same counted-threshold broadcast gate as the public operator: the
-    # hot set is the Zipf head (usually small) but grows with corpus
-    # size / shrinking max_df — never an unconditional broadcast.
-    hot_side = hot if hot.count() > broadcast_rows else F.broadcast(hot)
-    kept_idx = (
-        exploded.join(hot_side, on="seg", how="left_anti")
-        .groupBy("__id")
-        .agg(F.array_sort(F.collect_list("seg_idx")).alias("__kp"))
-    )
-    kept_words = F.flatten(
-        F.transform(
-            F.col("__kp"),
-            lambda j: F.slice(F.col("__w"), j * seg_words + 1, seg_words),
-        )
-    )
-    # kept_idx is doc-scale — corpus-scaled, never an estimate-based
-    # broadcast build (bucket_pairs rule).
-    return base.join(kept_idx.hint("shuffle_hash"), on="__id", how="left").select(
-        "__id",
-        F.when(F.col("__kp").isNotNull(), kept_words)
-        .otherwise(F.array().cast("array<string>"))
-        .alias("__w"),
-    )
-
-
-def _gram_keep_words(base: DataFrame, k: int = 8) -> DataFrame:
-    """Private words-array seam of ``sliding_gram_dedup`` (see
-    ``_boilerplate_keep_words``): takes a MATERIALIZED
-    ``(__id, __w array<string>)`` frame, returns ``(__id, __w)`` with
-    the kept tokens — same first-occurrence interval-union semantics,
-    no text reassembly/re-tokenization between pipeline stages.
-
-    The window/winner construction mirrors ``_gram_windows`` +
-    ``sliding_gram_dedup`` exactly: n_total = size(__w) (the public
-    path stores the same value at its base build), gram strings are
-    the same ``concat_ws(" ", slice(words, j+1, k))``, the winner is
-    the same min (doc id, pos) struct per distinct gram, and kept
-    positions are the same union of [pos, pos+k-1] intervals. Docs
-    shorter than ``k`` keep every token; docs whose every window was
-    seen earlier keep none (empty array -> the pipeline's "" rebuild).
-    """
-    n_total = F.size("__w")
-    wins = base.filter(n_total >= k).select(
-        "__id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), n_total - k),
-                lambda j: F.concat_ws(" ", F.slice(F.col("__w"), j + 1, k)),
-            )
-        ).alias("pos", "gram"),
-    )
-    firsts = wins.groupBy("gram").agg(
-        F.min(F.struct(F.col("__id"), F.col("pos"))).alias("__f")
-    )
-    keep_pos = (
-        firsts.select(
-            F.col("__f.__id").alias("__id"), F.col("__f.pos").alias("pos")
-        )
-        .groupBy("__id")
-        .agg(F.collect_list("pos").alias("__kp"))
-    )
-    kept_pos = F.array_sort(
-        F.array_distinct(
-            F.flatten(
-                F.transform(
-                    F.col("__kp"),
-                    lambda p: F.sequence(p, p + F.lit(k - 1)),
-                )
-            )
-        )
-    )
-    kept_words = F.transform(
-        kept_pos, lambda i: F.element_at(F.col("__w"), i + 1)
-    )
-    short = F.size("__w") < k
-    # keep_pos is doc-scale — corpus-scaled, never an estimate-based
-    # broadcast build (bucket_pairs rule).
-    return base.join(keep_pos.hint("shuffle_hash"), on="__id", how="left").select(
-        "__id",
-        F.when(short, F.col("__w"))
-        .otherwise(
-            F.when(F.col("__kp").isNotNull(), kept_words).otherwise(
-                F.array().cast("array<string>")
-            )
-        )
-        .alias("__w"),
-    )
+# ---------------------------------------------------------------------------
+# Exact word-set Jaccard join (PPJoin prefix filtering)
+# ---------------------------------------------------------------------------
 
 
 def prefix_filter_jaccard_pairs(
@@ -1542,7 +1413,6 @@ def prefix_filter_jaccard_pairs(
     text_col: str,
     id_col: str,
     threshold: float = 0.5,
-    _diag_out: list | None = None,
 ) -> DataFrame:
     """EXACT word-set Jaccard join (all pairs with J >= threshold) via
     PPJoin-style prefix filtering — the deterministic complement to
@@ -1656,7 +1526,17 @@ def prefix_filter_jaccard_pairs(
     (a, b) pair can still carry whichever duplicate's jaccard
     verified, so dedupe ids upstream.
     """
-    from corral_spark.functions.text import tokenize
+    return _ppjoin_stages(df, text_col, id_col, threshold)[2]
+
+
+def _ppjoin_stages(
+    df: DataFrame, text_col: str, id_col: str, threshold: float
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """``prefix_filter_jaccard_pairs`` returning its stage frames
+    ``(cands, gpairs, out)``: distinct candidate group pairs, verified
+    group pairs with their jaccard, and the expanded doc-pair output.
+    The operator and its funnel canary ``ppjoin_counts`` both build
+    through here, so the canary counts the frames the operator runs."""
     from pyspark.sql.window import Window
 
     t = float(threshold)
@@ -1855,13 +1735,6 @@ def prefix_filter_jaccard_pairs(
     gpairs = joined.filter(jac >= t).select(
         "ga", "gb", F.round(jac, 6).alias("jaccard")
     )
-    if _diag_out is not None:
-        # Diagnostics-only seam (the gram_dedup_counts "canary shares
-        # the operator's construction" discipline): expose the exact
-        # candidate / verified GROUP-pair frames the operator runs so
-        # ppjoin_counts can certify their linearity — never a
-        # reimplementation that could drift.
-        _diag_out.append((cands, gpairs))
     # Expand verified group pairs through the (id, gid) membership
     # relation — plain equi-joins, so the pair product materializes
     # as ROWS across partitions, never as one wide array. Within-
@@ -1895,7 +1768,7 @@ def prefix_filter_jaccard_pairs(
             F.lit(1.0).alias("jaccard"),
         )
     )
-    return cross.unionByName(within)
+    return cands, gpairs, cross.unionByName(within)
 
 
 def ppjoin_counts(
@@ -1904,10 +1777,10 @@ def ppjoin_counts(
     id_col: str,
     threshold: float = 0.5,
 ) -> dict[str, int]:
-    """Linearity diagnostic for ``prefix_filter_jaccard_pairs`` (r16
-    verdict item 6 — the minhash_pair_counts discipline applied to the
-    PPJoin path): the candidate funnel's volume drivers, counted off
-    the exact frames the operator builds via the ``_diag_out`` seam.
+    """Linearity diagnostic for ``prefix_filter_jaccard_pairs`` (the
+    minhash_pair_counts discipline applied to the PPJoin path): the
+    candidate funnel's volume drivers, counted off the exact frames
+    the operator builds (``_ppjoin_stages``).
 
     * ``candidate_group_pairs`` — distinct group pairs surviving the
       prefix + length + positional filters (what verification pays);
@@ -1920,11 +1793,7 @@ def ppjoin_counts(
     tokens by construction, so prefixes can never collide across
     replicas.
     """
-    diag: list = []
-    out = prefix_filter_jaccard_pairs(
-        df, text_col, id_col, threshold, _diag_out=diag
-    )
-    cands, gpairs = diag[0]
+    cands, gpairs, out = _ppjoin_stages(df, text_col, id_col, threshold)
     return {
         "candidate_group_pairs": cands.count(),
         "verified_group_pairs": gpairs.count(),

@@ -97,7 +97,6 @@ def fuzzy_join(
     max_dist: int = 1,
     max_block: int | None = None,
     cap_per_block: int | None = None,
-    _raw_out: list | None = None,
 ) -> DataFrame:
     """All pairs within Levenshtein distance ``max_dist`` (id_a < id_b).
 
@@ -116,14 +115,25 @@ def fuzzy_join(
     it on short keys (names, titles), not document bodies. The
     ``max_block`` / ``cap_per_block`` guards mean hot variant keys
     stay bounded exactly as in the distance-1 case.
-
-    ``_raw_out`` is a diagnostics-only seam (the gram_dedup_counts
-    "canary shares the operator's construction" discipline): when a
-    list is passed, the PRE-dedup raw candidate pair frame is appended
-    to it so ``fuzzy_candidate_counts`` can count the raw/distinct
-    candidate volumes of the exact plan the operator runs — never a
-    reimplementation that could drift.
     """
+    return _fuzzy_stages(
+        df, text_col, id_col, max_dist, max_block, cap_per_block
+    )[2]
+
+
+def _fuzzy_stages(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    max_dist: int,
+    max_block: int | None,
+    cap_per_block: int | None,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """``fuzzy_join`` returning its stage frames ``(raw, cands, out)``:
+    the variant-key join products before the pair dedup, the distinct
+    candidate pairs, and the verified output. The operator and its
+    funnel canary ``fuzzy_candidate_counts`` both build through here,
+    so the canary counts the frames the operator runs."""
     from corral_spark.operators.dedup import spread_input
 
     slim = df.select(
@@ -215,8 +225,6 @@ def fuzzy_join(
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
     )
-    if _raw_out is not None:
-        _raw_out.append(raw)
     cands = raw.dropDuplicates(["id_a", "id_b"])
     texts = slim.dropDuplicates(["id"])
     ta = texts.select(
@@ -231,12 +239,13 @@ def fuzzy_join(
     # for every SURVIVING pair is the exact distance (measured 2.1x
     # on the verify stage).
     lev = F.levenshtein("text_a", "text_b", max_dist)
-    return (
+    out = (
         cands.join(ta, "id_a")
         .join(tb, "id_b")
         .select("id_a", "id_b", "text_a", "text_b", lev.alias("lev"))
         .filter(F.col("lev") >= 0)
     )
+    return raw, cands, out
 
 
 def fuzzy_counts(
@@ -271,10 +280,9 @@ def fuzzy_candidate_counts(
     id_col: str,
     max_dist: int = 1,
 ) -> dict[str, int]:
-    """Extended linearity diagnostic (r16 verdict item 6): the FULL
-    candidate funnel of the exact fuzzy join, counted off the very
-    frames the operator builds (the ``_raw_out`` seam — no
-    reimplementation that could drift):
+    """Extended linearity diagnostic: the FULL candidate funnel of the
+    exact fuzzy join, counted off the very frames the operator builds
+    (``_fuzzy_stages`` — no reimplementation that could drift):
 
     * ``variant_rows`` — deletion-neighborhood index size;
     * ``raw_pairs`` — variant-key join products before the pair dedup
@@ -287,18 +295,11 @@ def fuzzy_candidate_counts(
     EXACTLY R x its base value — cross-replica candidates are
     impossible by construction (tools/scale_data.py).
     """
-    raw_box: list = []
-    out = fuzzy_join(
-        df, text_col, id_col, max_dist=max_dist, _raw_out=raw_box
-    )
-    base = fuzzy_counts_variant_rows(df, text_col, max_dist)
-    raw = raw_box[0]
+    raw, cands, out = _fuzzy_stages(df, text_col, id_col, max_dist, None, None)
     return {
-        "variant_rows": base,
+        "variant_rows": fuzzy_counts_variant_rows(df, text_col, max_dist),
         "raw_pairs": raw.count(),
-        "distinct_candidates": raw.dropDuplicates(
-            ["id_a", "id_b"]
-        ).count(),
+        "distinct_candidates": cands.count(),
         "verified_pairs": out.count(),
     }
 

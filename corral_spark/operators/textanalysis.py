@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from corral_spark.functions.text import tokenize
+from corral_spark.functions.text import split_words, tokenize
 from corral_spark.materialize import materialize
 from corral_spark.operators.dedup import word_shingles_arrow
 
@@ -32,12 +32,6 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 BPE_REGEX = r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]"
 
 
-def _words(text: Column) -> Column:
-    """Whitespace words via single-space split (documents are single-
-    space separated; the rule is mirrored verbatim in oracle SQL)."""
-    return F.filter(F.split(text, " "), lambda w: w != "")
-
-
 def text_stats(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -45,7 +39,7 @@ def text_stats(
     count, mean word length, stopword ratio, and a composite quality
     score in [0,1]. All ratios are single IEEE divisions of integer
     counts -> bit-stable across engines."""
-    words = _words(F.col(text_col))
+    words = split_words(F.col(text_col))
     n_words = F.size(words)
     n_distinct = F.size(F.array_distinct(words))
     total_chars = F.aggregate(
@@ -82,7 +76,7 @@ def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Heuristic language ID: count distinct marker words present per
     language; argmax wins, ties broken by language code order. Returns
     (doc_id, pred_lang, marker_hits)."""
-    words = F.array_distinct(_words(F.col(text_col)))
+    words = F.array_distinct(split_words(F.col(text_col)))
     scores = {
         lang: F.size(
             F.array_intersect(words, F.array([F.lit(w) for w in markers]))
@@ -105,7 +99,7 @@ def token_count_bpe(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Token counts: whitespace words and BPE-ish regex tokens
     (letter runs / digit runs / single symbols) — the standard cheap
     proxy for LLM token budgeting."""
-    words = _words(F.col(text_col))
+    words = split_words(F.col(text_col))
     bpe = F.regexp_extract_all(F.col(text_col), F.lit(BPE_REGEX), 0)
     return df.select(
         "doc_id",
@@ -151,7 +145,7 @@ def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     stage fused into the document scan. Ratios are single IEEE
     divisions rounded to 4dp (cross-engine-stable per the registry
     convention)."""
-    words = _words(F.col(text_col))
+    words = split_words(F.col(text_col))
     staged = df.select(
         "doc_id",
         words.alias("words"),

@@ -18,8 +18,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from corral_spark.functions.text import split_words
 from corral_spark.materialize import materialize
 from corral_spark.operators.dedup import (
+    _boilerplate_keep_words,
+    _gram_keep_words,
     dedup_exact,
     minhash_lsh_pairs,
     minhash_signatures,
@@ -118,58 +121,53 @@ def prepare_pretraining_corpus(
     )
     # 1b/1c. Optional hygiene stages (boilerplate removal, sliding-gram
     #     substring dedup) — both run pre-quality so the word-count
-    #     signals score the cleaned/deduplicated content. When any is
-    #     on, the pipeline routes through a PRIVATE words-array seam
-    #     (r17, guide §2.4 "don't recompute across stages"): the public
-    #     operators reassemble text with concat_ws and the next stage
-    #     re-splits that exact string — tokenize ONCE here, pass the
-    #     (__id, __w) words frame between the seam variants
-    #     (dedup._boilerplate_keep_words / _gram_keep_words), and
-    #     reassemble clean_text ONCE at the scored projection. The
-    #     operators' hot-segment / first-occurrence semantics are
-    #     unchanged (fused-vs-unfused outputs proven exceptAll-
-    #     identical at two SFs; tests/test_pretrain_fusion.py); the
-    #     public standalone operators keep their text contract.
-    use_words_seam = boilerplate_max_df is not None or gram_dedup_k is not None
-    if use_words_seam:
-        from corral_spark.operators.dedup import (
-            _boilerplate_keep_words,
-            _gram_keep_words,
-        )
-
-        words0 = F.filter(F.split("clean_text", " "), lambda w: w != "")
-        # Each seam stage has two consumers of its input (the segment/
-        # window explode and the final id join) — materialize between
-        # stages, exactly like the public operators' internal bases.
+    #     signals score the cleaned/deduplicated content. They chain
+    #     the operators' own words-array cores
+    #     (dedup._boilerplate_keep_words / _gram_keep_words, the one
+    #     implementation behind remove_boilerplate_segments and
+    #     sliding_gram_dedup): tokenize ONCE here, pass the (__id, __w)
+    #     words frame from core to core, and reassemble clean_text ONCE
+    #     at the scored projection — reassembling text between stages
+    #     would only have the next stage re-split the exact string
+    #     (measured: 15 -> 6 split sites in the pretrain_corpus_full
+    #     plan).
+    if boilerplate_max_df is not None or gram_dedup_k is not None:
+        # Each core has two consumers of its input (the segment/window
+        # explode and the final id join) — materialize between cores.
         wb = materialize(
-            clean.select(F.col(id_col).alias("__id"), words0.alias("__w")),
+            clean.select(
+                F.col(id_col).alias("__id"),
+                split_words(F.col("clean_text")).alias("__w"),
+            ),
             eager=False,
         )
         if boilerplate_max_df is not None:
             wb = materialize(
-                _boilerplate_keep_words(wb, max_df=boilerplate_max_df),
+                _boilerplate_keep_words(wb, max_df=boilerplate_max_df).select(
+                    "__id", "__w"
+                ),
                 eager=False,
             )
             report["after_boilerplate_removal"] = _count(
                 wb.filter(F.size("__w") > 0)
             )
         if gram_dedup_k is not None:
-            wb = materialize(_gram_keep_words(wb, k=gram_dedup_k), eager=False)
+            wb = materialize(
+                _gram_keep_words(wb, k=gram_dedup_k).select("__id", "__w"),
+                eager=False,
+            )
             report["after_gram_dedup"] = _count(wb.filter(F.size("__w") > 0))
-        words = F.col("__w")
         pre_scored = wb.select(
             F.col("__id").alias(id_col),
-            # Canonical single-space join — identical to the public
-            # operators' own rebuilds (segments/tokens are non-empty
-            # words joined by single spaces).
-            F.concat_ws(" ", words).alias("clean_text"),
-            words.alias("__w"),
+            # The operators' own text rebuild: a single-space join of
+            # the kept words.
+            F.concat_ws(" ", "__w").alias("clean_text"),
+            "__w",
         )
-        words_src = F.col("__w")
+        words = F.col("__w")
     else:
         pre_scored = clean
-        words_src = F.filter(F.split("clean_text", " "), lambda w: w != "")
-    words = words_src
+        words = split_words(F.col("clean_text"))
     rep_cols = (
         [
             F.round(

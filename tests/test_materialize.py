@@ -103,12 +103,23 @@ def test_capstone_persist_mode_same_rows(spark, mode_conf):
 
 
 @pytest.mark.parametrize(
-    "name", ["minhash_pairs_docs", "cross_corpus_near_dups"]
+    "name",
+    [
+        "minhash_pairs_docs",
+        "cross_corpus_near_dups",
+        "gram_dedup_docs",
+        "boilerplate_removed_docs",
+        "segment_dedup_docs",
+        "pretrain_corpus_full",
+    ],
 )
 def test_minhash_queries_same_rows_in_every_mode(spark, tmp_path, mode_conf, name):
-    """The MinHash kernel's three barriers (lazy shingles, eager band
-    keys, lazy df annotation) must give the same pairs whether they
-    are local checkpoints, reliable checkpoints or persisted caches."""
+    """The dedup barriers must give the same rows whether they are
+    local checkpoints, reliable checkpoints or persisted caches: the
+    MinHash kernel's three (lazy shingles, eager band keys, lazy df
+    annotation), the text-hygiene words base and boilerplate hot set,
+    and the pretrain pipeline's barriers between its words-array
+    cores."""
     from corral_spark.queries import REGISTRY
 
     def rows():
@@ -116,7 +127,7 @@ def test_minhash_queries_same_rows_in_every_mode(spark, tmp_path, mode_conf, nam
         return sorted(map(tuple, df.collect()))
 
     base = rows()
-    assert base, f"{name} found no pairs at {SF_DIR}"
+    assert base, f"{name} returned no rows at {SF_DIR}"
     mode_conf.set(CONF_KEY, "checkpoint")
     mode_conf.set(CHECKPOINT_DIR_KEY, str(tmp_path / "ck"))
     assert rows() == base

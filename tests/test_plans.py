@@ -252,6 +252,37 @@ def test_gram_dedup_no_window_no_cartesian(spark):
     assert "Window" not in plan.replace("WindowGroupLimit", "")
 
 
+@pytest.mark.parametrize(
+    "name, exchanges, barriers",
+    [
+        ("gram_dedup_docs", 4, 1),
+        ("boilerplate_removed_docs", 4, 2),
+        ("segment_dedup_docs", 4, 1),
+    ],
+)
+def test_text_hygiene_exchange_and_barrier_counts(
+    spark, monkeypatch, name, exchanges, barriers
+):
+    # Structural budget of the text-hygiene operators: executed-plan
+    # Exchange count (shuffles plus the boilerplate hot-set broadcast)
+    # and materialize barriers (the words base, plus the hot set). A
+    # count is host-independent, so any rise is a plan change, never
+    # noise.
+    import corral_spark.operators.dedup as d
+
+    calls = []
+    real = d.materialize
+
+    def counting(df, eager=True):
+        calls.append(eager)
+        return real(df, eager=eager)
+
+    monkeypatch.setattr(d, "materialize", counting)
+    plan = plan_of(spark, name)
+    assert plan.count("Exchange") == exchanges, plan
+    assert len(calls) == barriers
+
+
 def test_source_cap_window_group_limit(spark):
     # The per-domain cap must push the rank bound below the exchange:
     # a hot domain moves O(cap * tasks) rows, never its full row set.

@@ -1,24 +1,27 @@
-"""Pin the r17 pretrain hygiene words-array fusion: the private seam
-variants (dedup._boilerplate_keep_words / _gram_keep_words) must be
-row-identical to the public text-contract operators they fuse
-(remove_boilerplate_segments / sliding_gram_dedup), and the fused
-pipeline must equal the unfused stage composition end to end.
+"""Pin the words-array cores behind the text-hygiene operators.
 
-The seam exists so prepare_pretraining_corpus stops re-splitting the
-exact string the previous stage just reassembled (guide §2.4); these
-tests are the drift guard — if either public operator's semantics
-move, the seam must move with it or this fails.
+``dedup._boilerplate_keep_words`` and ``dedup._gram_keep_words`` are the
+one implementation of boilerplate removal and sliding-gram dedup: the
+public text operators (remove_boilerplate_segments /
+sliding_gram_dedup) run them over a tokenized words frame and rebuild
+the text, and prepare_pretraining_corpus chains them on its own words
+frame without reassembling text between stages. These tests check
+that a core fed a words frame gives exactly the public operator's
+text, on an adversarial corpus, and that the pipeline equals the
+public-operator stage composition end to end.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from corral_spark.functions.text import split_words
 from corral_spark.materialize import materialize
 from corral_spark.operators.dedup import (
     _boilerplate_keep_words,
     _gram_keep_words,
     remove_boilerplate_segments,
+    segment_dedup,
     sliding_gram_dedup,
 )
 
@@ -41,9 +44,10 @@ _DOCS = [
 
 
 def _base_words(df, text_col, id_col):
-    words = F.filter(F.split(F.col(text_col), " "), lambda w: w != "")
     return materialize(
-        df.select(F.col(id_col).alias("__id"), words.alias("__w")),
+        df.select(
+            F.col(id_col).alias("__id"), split_words(F.col(text_col)).alias("__w")
+        ),
         eager=False,
     )
 
@@ -86,9 +90,37 @@ def test_gram_words_seam_matches_public_operator(spark):
     assert seam.filter("doc_id = 4").collect()[0]["clean_text"] == "short doc"
 
 
+def test_text_operators_same_rows_with_and_without_ansi(spark):
+    """The NULL, empty and whitespace-only rows of the adversarial
+    corpus give NULL and empty word arrays, and ``size(NULL)`` is -1 in
+    legacy mode but NULL under ANSI: every public operator must return
+    the same rows in both sessions."""
+    key = "spark.sql.ansi.enabled"
+    before = spark.conf.get(key)
+    ops = (remove_boilerplate_segments, sliding_gram_dedup, segment_dedup)
+    rows = {}
+    try:
+        for ansi in ("false", "true"):
+            spark.conf.set(key, ansi)
+            df = spark.createDataFrame(_DOCS, "doc_id long, text string")
+            rows[ansi] = [
+                sorted(map(tuple, op(df, "text", "doc_id").collect()))
+                for op in ops
+            ]
+    finally:
+        spark.conf.set(key, before)
+    assert rows["false"] == rows["true"]
+    # NULL text keeps nothing; sliding-gram reports its token count as
+    # NULL, the segment operators report 0 segments.
+    boiler, gram, seg = rows["true"]
+    assert boiler[-1] == seg[-1] == (9, "", 0, 0)
+    assert gram[-1] == (9, "", 0, None)
+
+
 def test_fused_pipeline_equals_unfused_composition(spark):
-    """End-to-end: the fused prepare_pretraining_corpus (words seam)
-    must emit exactly what the public-operator composition emits —
+    """End-to-end: prepare_pretraining_corpus (cores chained on one
+    words frame) must emit exactly what the public-operator
+    composition emits —
     the same stage order on the same corpus slice the registry
     queries use, at sf0.001 for speed."""
     from corral_spark.operators.quality import normalize_text, redact_pii
@@ -110,7 +142,7 @@ def test_fused_pipeline_equals_unfused_composition(spark):
         gram_dedup_k=8,
     )
 
-    # Unfused: the exact pre-r17 stage composition, public operators
+    # Unfused: the same stages through the public text operators
     # only, same parameters and order (decontaminate -> normalize ->
     # boilerplate -> gram -> quality incl. top-token bound).
     from corral_spark.operators.contamination import decontaminate
@@ -127,7 +159,7 @@ def test_fused_pipeline_equals_unfused_composition(spark):
     clean = sliding_gram_dedup(clean, "clean_text", "doc_id", k=8).select(
         "doc_id", "clean_text"
     )
-    words = F.filter(F.split("clean_text", " "), lambda w: w != "")
+    words = split_words(F.col("clean_text"))
     scored = clean.select(
         "doc_id",
         "clean_text",

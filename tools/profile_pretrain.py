@@ -30,6 +30,7 @@ def _prefixes(spark, sf_dir):
         dedup_exact,
         minhash_verified_pairs,
     )
+    from corral_spark.functions.text import split_words
     from corral_spark.operators.graph import connected_components
     from corral_spark.operators.quality import normalize_text, redact_pii
     from corral_spark.pipelines import prepare_pretraining_corpus
@@ -43,7 +44,7 @@ def _prefixes(spark, sf_dir):
             "doc_id",
             redact_pii(normalize_text(F.col("text"))).alias("clean_text"),
         )
-        words = F.filter(F.split("clean_text", " "), lambda w: w != "")
+        words = split_words(F.col("clean_text"))
         scored = d.select(
             "doc_id",
             "clean_text",
