@@ -55,7 +55,7 @@ def _clear_storage(spark) -> None:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from corral_spark.queries import REGISTRY
-    from corral_spark.session import local_session
+    from corral_spark.session import codegen_compiles, local_session
     from tools.hostprobe import light_probe
 
     # Self-adjudicating epoch evidence (r11 verdict item 2): the
@@ -99,6 +99,7 @@ def main() -> None:
     # round-over-round deltas can be judged against the host's actual
     # variance instead of a single sample.
     all_runs: dict[str, list[float]] = {n: [] for n in bench_queries}
+    compiles0 = codegen_compiles(spark)
     for _pass in range(3):
         for name, q in sorted(bench_queries.items()):
             t0 = time.perf_counter()
@@ -106,6 +107,9 @@ def main() -> None:
             all_runs[name].append(round(time.perf_counter() - t0, 3))
             _clear_storage(spark)
     timings = {name: min(runs) for name, runs in all_runs.items()}
+    # generated classes compiled by the three passes; a warm loop whose
+    # working set fits Spark's codegen cache compiles them in pass 1 only
+    compiles = codegen_compiles(spark) - compiles0
 
     sf = sf_dir.rstrip("/").split("sf")[-1]
     out = {
@@ -123,7 +127,7 @@ def main() -> None:
     # ("parsed": null, tail starting mid-object — r11 verdict item 3).
     # The final line below is kept compact (mins + ratios only) so it
     # always fits and parses; builder-run logs retain both lines.
-    diag = {"diag": "runs", "runs": all_runs}
+    diag = {"diag": "runs", "runs": all_runs, "codegen_compiles": compiles}
 
     # sf1 scaling canary: min-of-1 on the dedup headliners (the only
     # queries whose cost structure could hide an O(n^2) candidate

@@ -168,10 +168,17 @@ def prepare_pretraining_corpus(
     else:
         pre_scored = clean
         words = split_words(F.col("clean_text"))
+    n_words = F.size(words)
+    # The ratios are NULL for a document without words, as x / 0 is with
+    # ANSI off; under ANSI a bare division by 0 raises DIVIDE_BY_ZERO.
+    has_words = n_words > 0
     rep_cols = (
         [
-            F.round(
-                _max_run(F.array_sort(words)).cast("double") / F.size(words), 4
+            F.when(
+                has_words,
+                F.round(
+                    _max_run(F.array_sort(words)).cast("double") / n_words, 4
+                ),
             ).alias("top_token_fraction")
         ]
         if max_top_token_fraction is not None
@@ -180,8 +187,10 @@ def prepare_pretraining_corpus(
     scored = pre_scored.select(
         id_col,
         "clean_text",
-        F.size(words).alias("n_words"),
-        (F.size(F.array_distinct(words)) / F.size(words)).alias("distinct_ratio"),
+        n_words.alias("n_words"),
+        F.when(has_words, F.size(F.array_distinct(words)) / n_words).alias(
+            "distinct_ratio"
+        ),
         *rep_cols,
     )
     cond = (F.col("n_words") >= min_words) & (

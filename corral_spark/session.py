@@ -41,6 +41,17 @@ ENGINE_CONF: dict[str, str] = {
     # events.ts is TIMESTAMP(NANOS) parquet, which the vectorized reader
     # rejects; read as long and convert (sources.tables.load_table).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Generated-class cache (a static conf; Spark's default holds 100
+    # classes). One pass of the four dedup registry queries at sf0.01
+    # generates ~190 (minhash_pairs_docs 51, ppjoin_neighbor_counts
+    # 68-76, gram_dedup_docs 34, fuzzy_customer_pairs 30), so at 100 the
+    # LRU evicts a query's classes before it runs again and every run
+    # recompiles them: a warm local[4] pass took 7.6 s at 100 entries and
+    # 6.0 s at 1000 (perfbench dedup medians).
+    # 1000 holds that working set five times over (all 141 registry
+    # queries together generate ~1,930 at sf0.001). build_session
+    # creates the cache itself, so that this size applies.
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 # Runtime bloom-filter join pruning is part of the engine posture; see
@@ -110,6 +121,10 @@ def object_store_conf(
     return conf
 
 
+#: The Scala object that owns the generated-class cache.
+_CODEGEN_OBJECT = "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$"
+
+
 def build_session(
     app_name: str = "corral_spark",
     master: str | None = None,
@@ -131,7 +146,25 @@ def build_session(
         conf.update(extra_conf)
     for k, v in conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # The JVM sizes the generated-class cache once, from ``SQLConf.get``
+    # on whichever thread first generates code. Only this thread has the
+    # new session active; a first query from another Python thread reads
+    # Spark's defaults and leaves the cache at 100 entries. Initialising
+    # the cache's owner here applies the session's
+    # ``spark.sql.codegen.cache.maxEntries``. It runs no job; reading the
+    # conf builds the session state the first query would build anyway
+    # (0.4-0.8 s on local[4]), so that cost moves into session start.
+    spark._jvm.java.lang.Class.forName(_CODEGEN_OBJECT)
+    return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes Janino has compiled in this JVM so far: the count of
+    Spark's ``CodegenMetrics.METRIC_COMPILATION_TIME`` histogram. A warm
+    query that still adds to it lost its classes from the cache."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def local_session(app_name: str = "corral_spark-local") -> SparkSession:

@@ -117,6 +117,41 @@ def test_text_operators_same_rows_with_and_without_ansi(spark):
     assert gram[-1] == (9, "", 0, None)
 
 
+def test_pipeline_same_rows_with_and_without_ansi(spark):
+    """With ``min_words=0`` the empty and whitespace-only documents reach
+    the quality ratios, which divide by the word count: both sessions
+    must give the same rows (NULL ratios filter those documents out),
+    on the plain path and the words-array hygiene path."""
+    from corral_spark.pipelines import prepare_pretraining_corpus
+
+    key = "spark.sql.ansi.enabled"
+    before = spark.conf.get(key)
+    variants = (
+        {},
+        {"max_top_token_fraction": 0.5, "boilerplate_max_df": 2, "gram_dedup_k": 8},
+    )
+    rows = {}
+    try:
+        for ansi in ("false", "true"):
+            spark.conf.set(key, ansi)
+            df = spark.createDataFrame(_DOCS, "doc_id long, text string")
+            rows[ansi] = [
+                sorted(
+                    map(
+                        tuple,
+                        prepare_pretraining_corpus(
+                            df, min_words=0, with_report=False, **kw
+                        )[0].collect(),
+                    )
+                )
+                for kw in variants
+            ]
+    finally:
+        spark.conf.set(key, before)
+    assert rows["false"] == rows["true"]
+    assert all(rows["true"]), rows  # some documents survive each variant
+
+
 def test_fused_pipeline_equals_unfused_composition(spark):
     """End-to-end: prepare_pretraining_corpus (cores chained on one
     words frame) must emit exactly what the public-operator

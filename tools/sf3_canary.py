@@ -15,12 +15,13 @@ must stay 0 (the quadratic-fallback drivers).
 Usage:
   python tools/sf3_canary.py [R] [dir] [families]   # default 30 /tmp/sf3
 ``families`` is a comma list of {docs,fuzzy,ppjoin} (default docs —
-the original minhash/gram/cross run). Builds the scaled corpora if
-missing (documents for docs/ppjoin; marker-perturbed customer_fuzzy
-replicas under <dir>_fuzzy for fuzzy — cross-replica lev >= 18
-guaranteed by tools/scale_data.py). r16 verdict item 6 added the
-fuzzy (variant_rows / raw_pairs / distinct_candidates /
-verified_pairs via fuzzy_candidate_counts) and ppjoin
+the original minhash/gram/cross run). Builds the scaled documents
+for docs/ppjoin if missing. The fuzzy family rebuilds its
+marker-perturbed customer_fuzzy corpora on every run: the R=1 base
+under <dir>/fuzzy_base, the R replicas under <dir>/fuzzy
+(cross-replica lev >= 18 guaranteed by tools/scale_data.py).
+r16 verdict item 6 added the fuzzy (variant_rows / raw_pairs /
+distinct_candidates / verified_pairs via fuzzy_candidate_counts) and ppjoin
 (candidate_group_pairs / verified_group_pairs / output_pairs via
 ppjoin_counts) families, counted off the operators' own frames.
 Exit 1 on any non-exact ratio.
@@ -54,11 +55,16 @@ def main() -> int:
         # token rename per replica -> zero cross-replica shingle
         # overlap) rather than a second writer that could drift.
         scale_data.scale(r, out, tables={"documents"})
-    fuzzy_dirs = {"base": "/tmp/sf01_fuzzy", "big": out.rstrip("/") + "_fuzzy"}
+    # Both fuzzy corpora live under <dir> and are rebuilt every run (a
+    # DuckDB copy, seconds at R=30), so the base and the replica always
+    # come from the same scale_data rule.
+    fuzzy_dirs = {
+        "base": os.path.join(out, "fuzzy_base"),
+        "big": os.path.join(out, "fuzzy"),
+    }
     if "fuzzy" in families:
         for d, reps in ((fuzzy_dirs["base"], 1), (fuzzy_dirs["big"], r)):
-            if not os.path.exists(os.path.join(d, "customer_fuzzy.parquet")):
-                scale_data.scale_fuzzy_customers(reps, d)
+            scale_data.scale_fuzzy_customers(reps, d)  # COPY overwrites
 
     # Driver memory must reach the JVM LAUNCHER (sf1_gate.sh recipe);
     # a builder .config("spark.driver.memory") proved unreliable here
