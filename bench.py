@@ -29,6 +29,7 @@ SPARK_GRAFT_SF1=0 or when benching a non-default SF dir.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import sys
@@ -47,6 +48,11 @@ def _clear_storage(spark) -> None:
     executor storage and inflate later timings (measured: pretrain at
     sf1 87s dirty vs 17s clean). Each query rebuilds its own lineage,
     so cross-query reuse is never legitimate — unpersist everything.
+
+    Call it only while no other thread runs a query: unpersisting a
+    block that a concurrent query's lazy ``localCheckpoint`` still
+    needs makes that query fail with ``Storage level ... is not
+    appropriate for local checkpointing``.
     """
     for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
         rdd.unpersist(False)
@@ -139,8 +145,6 @@ def main() -> None:
         probe_sf1 = light_probe()
         sf1_dir = os.environ.get("SPARK_GRAFT_SF1_DIR", "/tmp/sf1")
         if not os.path.exists(os.path.join(sf1_dir, "documents.parquet")):
-            import contextlib
-
             from tools.scale_data import scale
 
             # scale() logs row counts to stdout; keep stdout pure (the
@@ -209,95 +213,7 @@ def main() -> None:
                 threshold=0.5,
             )
             _clear_storage(spark)
-        # Fuzzy-join linearity canary (r10 verdict item 4): the one
-        # blocked-candidate operator with no 10x count evidence. The
-        # shared sf1 corpus cannot serve (c_name replicates verbatim
-        # -> TRUE pair set grows quadratically), so both sides use
-        # the marker-perturbed customer_fuzzy variant: base = the
-        # R=1 variant, sf1 = 10 disjoint replicas with cross-replica
-        # lev >= 18 guaranteed (tools/scale_data.py docstring). Depth
-        # 1 exercises the same neighborhood/equi-join/verify path as
-        # lev2 at a tenth of the index volume — the blocking-
-        # completeness contract is parameter-independent.
-        import contextlib as _ctx
 
-        from corral_spark.operators.fuzzy import fuzzy_counts
-        from tools.scale_data import scale_fuzzy_customers
-
-        from tools.scale_data import KOFF
-
-        fuzzy_base_dir = os.environ.get(
-            "SPARK_GRAFT_FUZZY_BASE_DIR", "/tmp/sf01_fuzzy"
-        )
-        for d, reps in ((fuzzy_base_dir, 1), (sf1_dir, 10)):
-            if not os.path.exists(os.path.join(d, "customer_fuzzy.parquet")):
-                with _ctx.redirect_stdout(sys.stderr):
-                    scale_fuzzy_customers(reps, d)
-        fcounts = {}
-        freps = {}
-        for label, d in (("base", fuzzy_base_dir), ("sf1", sf1_dir)):
-            cust = spark.read.parquet(
-                os.path.join(d, "customer_fuzzy.parquet")
-            )
-            # Derive R from the data itself (r11 ADVICE item 2): each
-            # replica's keys live in a disjoint KOFF band, so the
-            # distinct band count IS the replica count — a
-            # pre-existing SPARK_GRAFT_SF1_DIR generated with a
-            # different R can no longer silently skew the expected
-            # ratio. Recorded alongside the counters so the expected
-            # linearity factor is explicit in the output.
-            freps[label] = (
-                cust.select(
-                    (F.col("c_custkey") / F.lit(KOFF))
-                    .cast("long")
-                    .alias("band")
-                )
-                .distinct()
-                .count()
-            )
-            fcounts[label] = fuzzy_counts(
-                cust, "c_name", "c_custkey", max_dist=1
-            )
-            _clear_storage(spark)
-        # Depth-2 replica canary, promoted from the r11 one-off to a
-        # cheap per-round line (r11 verdict item 6): the full-corpus
-        # d=2 run costs 680s at sf1 so it stays one-off, but on a
-        # LIMITED replica set (same marker construction, every replica
-        # replicating the SAME 1000-key subset) the exact-3x contract
-        # is parameter-identical and costs seconds. R=3 catches
-        # pairwise leaks R=2 could mask (same choice as the pytest
-        # pin, which runs d=1).
-        d2_dirs = {
-            "base": os.environ.get(
-                "SPARK_GRAFT_FUZZY_D2_R1_DIR", "/tmp/fuzzy_d2_r1"
-            ),
-            "sf1": os.environ.get(
-                "SPARK_GRAFT_FUZZY_D2_R3_DIR", "/tmp/fuzzy_d2_r3"
-            ),
-        }
-        for d, reps in ((d2_dirs["base"], 1), (d2_dirs["sf1"], 3)):
-            if not os.path.exists(os.path.join(d, "customer_fuzzy.parquet")):
-                with _ctx.redirect_stdout(sys.stderr):
-                    scale_fuzzy_customers(reps, d, limit=1000)
-        f2counts = {}
-        f2reps = {}
-        for label, d in d2_dirs.items():
-            cust = spark.read.parquet(
-                os.path.join(d, "customer_fuzzy.parquet")
-            )
-            f2reps[label] = (
-                cust.select(
-                    (F.col("c_custkey") / F.lit(KOFF))
-                    .cast("long")
-                    .alias("band")
-                )
-                .distinct()
-                .count()
-            )
-            f2counts[label] = fuzzy_counts(
-                cust, "c_name", "c_custkey", max_dist=2
-            )
-            _clear_storage(spark)
         def _ctable(pair: dict, metrics=None) -> dict:
             """{metric: [base, sf1, ratio]} — the compact triple form
             the final line uses (the verbose {base/sf1/ratio} dicts
@@ -310,6 +226,60 @@ def main() -> None:
                 ]
                 for m in (metrics or pair["base"])
             }
+
+        # Fuzzy-join linearity canary: the one blocked-candidate
+        # operator with no 10x count evidence. The shared sf1 corpus
+        # cannot serve (c_name replicates verbatim -> TRUE pair set
+        # grows quadratically), so both sides use the marker-perturbed
+        # customer_fuzzy variant: base = the R=1 variant, sf1 = R
+        # disjoint replicas with cross-replica lev >= 18 guaranteed
+        # (tools/scale_data.py docstring). Depth 1 runs the whole
+        # corpus through the same neighborhood/equi-join/verify path as
+        # lev2 at a tenth of the index volume; depth 2 (680s on the
+        # full sf1 corpus) runs a limited
+        # replica set (every replica replicating the SAME 1000-key
+        # subset), where the exact-R contract is parameter-identical
+        # and costs seconds. R=3 catches pairwise leaks R=2 could
+        # mask. Every corpus is rebuilt under sf1_dir on every run (a
+        # DuckDB COPY, seconds, outside the timed loops), so no corpus
+        # built by an older scale_data rule is ever compared.
+        from corral_spark.operators.fuzzy import fuzzy_counts
+        from tools.scale_data import KOFF, scale_fuzzy_customers
+
+        fuzzy: dict[str, dict] = {}
+        for key, max_dist, limit, reps in (
+            ("fuzzy", 1, None, 10),
+            ("fuzzy_d2", 2, 1000, 3),
+        ):
+            fcounts = {}
+            freps = {}
+            for label, r in (("base", 1), ("sf1", reps)):
+                d = os.path.join(sf1_dir, f"{key}_r{r}")
+                with contextlib.redirect_stdout(sys.stderr):
+                    scale_fuzzy_customers(r, d, limit=limit)
+                cust = spark.read.parquet(
+                    os.path.join(d, "customer_fuzzy.parquet")
+                )
+                # Derive R from the data itself: each replica's keys
+                # live in a disjoint KOFF band, so the distinct band
+                # count IS the replica count, recorded alongside the
+                # counters so the expected linearity factor is
+                # explicit in the output.
+                freps[label] = (
+                    cust.select(
+                        (F.col("c_custkey") / F.lit(KOFF))
+                        .cast("long")
+                        .alias("band")
+                    )
+                    .distinct()
+                    .count()
+                )
+                fcounts[label] = fuzzy_counts(
+                    cust, "c_name", "c_custkey", max_dist=max_dist
+                )
+                _clear_storage(spark)
+            fuzzy[f"{key}_counts"] = _ctable(fcounts)
+            fuzzy[f"{key}_replicas"] = [freps["base"], freps["sf1"]]
 
         out["sf1"] = {
             "probe": probe_sf1,
@@ -331,10 +301,7 @@ def main() -> None:
             "cross_corpus_counts": _ctable(xcounts),
             # expected linearity factor = replicas[sf1]/replicas[base],
             # derived from the data's KOFF bands, never assumed.
-            "fuzzy_counts": _ctable(fcounts),
-            "fuzzy_replicas": [freps["base"], freps["sf1"]],
-            "fuzzy_d2_counts": _ctable(f2counts),
-            "fuzzy_d2_replicas": [f2reps["base"], f2reps["sf1"]],
+            **fuzzy,
         }
         diag["sf1_runs"] = sf1_runs
         # gram_dedup_docs is ROW-COMPLETE (one output row per input
