@@ -509,12 +509,7 @@ def customer_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("cohort_month", "month_offset")
 
 
-# ------------------------------------------------- second wave (r8)
-#
-# Registered after the r8 head was sealed (its 50 slots are the
-# committed rotation obligations + the six first-wave rows above);
-# oracle-gated by pytest + driver_sim now, first driver rows promised
-# for the round-9 head (ledger note in __spark_entry__.py).
+# -------------------------------- price bins, transitions, anomalies
 
 
 @register(

@@ -439,3 +439,89 @@ def test_upsert_snapshot_read_uses_manifest_schema(spark, tmp_path):
     inferred = read_upsert_snapshot(spark, table)
     assert inferred.schema == snap.schema
     assert sorted(tuple(r) for r in inferred.collect()) == want
+
+
+def _rdd_names(spark, job_ids) -> list[str]:
+    """Names of the RDDs in every stage of ``job_ids`` (the status
+    store's operation graphs; a Python task runs a ``PythonRDD``)."""
+
+    def seq(s):
+        it = s.iterator()
+        while it.hasNext():
+            yield it.next()
+
+    def names(cluster):
+        yield from (n.name() for n in seq(cluster.childNodes()))
+        for child in seq(cluster.childClusters()):
+            yield from names(child)
+
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    tracker = spark.sparkContext.statusTracker()
+    return [
+        name
+        for job in job_ids
+        for stage in tracker.getJobInfo(job).stageIds
+        for name in names(jsc.statusStore().operationGraphForStage(stage).rootCluster())
+    ]
+
+
+def test_first_upsert_batch_runs_no_python_scan(spark, tmp_path):
+    """A table's first micro-batch merges against an empty frame, and an
+    all-keys-deleted snapshot reads as one. Both are JVM local
+    relations: neither runs a Python task (``createDataFrame([], ...)``
+    ran one per slot), and the manifest records the value schema
+    unchanged."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from corral_spark.streaming.ops import (
+        foreach_batch_upsert_sink,
+        read_upsert_snapshot,
+    )
+    from tests.test_sources import jobs_in_group
+
+    src = tmp_path / "cdc"
+    src.mkdir()
+    # Every row deletes, so the first batch also commits an empty table.
+    pq.write_table(
+        pa.table(
+            {
+                "k": pa.array([1, 2], pa.int64()),
+                "v": pa.array(["a", "b"], pa.string()),
+                "is_delete": pa.array([True, True], pa.bool_()),
+            }
+        ),
+        str(src / "b1.parquet"),
+    )
+    table = str(tmp_path / "table")
+    stream = spark.readStream.schema("k long, v string, is_delete boolean").parquet(
+        str(src)
+    )
+    q = foreach_batch_upsert_sink(
+        stream, table, str(tmp_path / "ckpt"), "k", delete_col="is_delete"
+    )
+    q.awaitTermination()
+    # The stream's jobs run under its run id as job group.
+    batch_rdds = _rdd_names(
+        spark, spark.sparkContext.statusTracker().getJobIdsForGroup(q.runId)
+    )
+    assert batch_rdds  # the batch's write ran
+    assert "PythonRDD" not in batch_rdds
+
+    m = json.loads((tmp_path / "table" / "v=0" / "manifest.json").read_text())
+    assert m["buckets"] == {}
+    assert m["schema"] == {
+        "type": "struct",
+        "fields": [
+            {"name": "k", "type": "long", "nullable": True, "metadata": {}},
+            {"name": "v", "type": "string", "nullable": True, "metadata": {}},
+        ],
+    }
+    rows, jobs = jobs_in_group(
+        spark, "empty-snapshot", lambda: read_upsert_snapshot(spark, table).collect()
+    )
+    assert rows == []
+    assert "PythonRDD" not in _rdd_names(spark, jobs)

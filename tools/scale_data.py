@@ -23,7 +23,8 @@ Replication rules (replica k of R, key offset k * 10**9):
   vectors across replicas — the adversarial case for ANN/near-dup:
   every vector gains R-1 planted neighbors).
 
-- customer_fuzzy (EXTRA table, r10 verdict item 4): the plain
+- customer_fuzzy (not written by ``scale()``: its readers call
+  ``scale_fuzzy_customers`` with their own out_dir): the plain
   replicated customer table cannot canary the fuzzy (levenshtein)
   join — c_name replicates VERBATIM, so every name gains R-1 exact
   copies and the TRUE lev<=d pair set grows quadratically in R. This
@@ -71,9 +72,9 @@ def scale_fuzzy_customers(
 ) -> None:
     """Write ``customer_fuzzy.parquet``: R disjoint-key replicas of
     customer with the per-replica marker-interleaved c_name (module
-    docstring has the exactness argument). Callable on its own so
-    bench.py can backfill the table into an sf1 dir generated before
-    this canary existed, and generate the R=1 base variant. ``limit``
+    docstring has the exactness argument). bench.py,
+    tools/sf3_canary.py and the pytest pin each build the R-replica
+    table and the R=1 base variant in their own directories. ``limit``
     keeps only base rows with c_custkey < limit — every replica
     replicates the SAME subset, so the R-linearity guarantee is
     unchanged (used by the pytest pin to stay cheap)."""
@@ -169,8 +170,6 @@ def scale(r: int, out_dir: str, tables: set[str] | None = None) -> None:
         f"SELECT vec_id + {{off}} AS vec_id, embedding, label"
         f" FROM {src('embeddings')}",
     )
-    if tables is None or "customer_fuzzy" in tables:
-        scale_fuzzy_customers(r, out_dir)
 
 
 if __name__ == "__main__":
