@@ -30,7 +30,7 @@ _PREC = 12
 def dec(col: Column | str, scale: int = 2) -> Column:
     """Cast a (2-decimal) double column to exact decimal.
 
-    try_cast, not cast (r14 extreme-value campaign): a value outside
+    try_cast, not cast (extreme-value campaign): a value outside
     the DECIMAL(12,2) domain (|x| >= 10^10 — corrupt at 100 TB
     schema-on-read, never a real money amount) becomes NULL and is
     skipped by SUM/AVG on BOTH engines (oracles mirror with
@@ -53,7 +53,7 @@ def dec_rate(col: Column | str) -> Column:
     hygiene: revenue products sized from a (12,2) rate factor forced
     DuckDB's 128-bit path and let corrupt rates inflate money sums
     to 1e20 — past even dsum_money's 2^53 headroom, where
-    decimal->double casting picks up a cross-engine ulp (r14 extreme
+    decimal->double casting picks up a cross-engine ulp (extreme-value
     campaign). With rates pinned to (3,2), in-domain products stay
     within both engines' exact-integer range. Oracle mirror:
     ``CASE WHEN col BETWEEN 0 AND 1 THEN TRY_CAST(col AS

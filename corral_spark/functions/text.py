@@ -15,6 +15,15 @@ from pyspark.sql import functions as F
 #: (word_count.go:15).
 _NON_ALNUM = r"[^a-zA-Z0-9\s]+"
 
+#: DuckDB mirror of ``tokenize`` for the registry's oracle SQL
+#: (``TOKENIZE_SQL.format(col=...)``): sanitize -> lower -> split ->
+#: drop empties, so both engines tokenize by the one rule kept here.
+TOKENIZE_SQL = (
+    "list_filter(string_split_regex(trim(lower("
+    "regexp_replace({col}, '[^a-zA-Z0-9\\s]+', ' ', 'g'))), '\\s+'),"
+    " x -> x <> '')"
+)
+
 
 def tokenize(col: Column) -> Column:
     """Text -> array<string> of lowercase alphanumeric words.

@@ -56,10 +56,11 @@ def iter_barrier(df: DataFrame, with_count: bool = False):
     whose next round joins the barrier output with itself, the
     estimates COMPOUND: each round's estimate is a product of the
     previous round's (measured on a 128-node graph in a vanilla
-    session: sizeInBytes 9.0E+75 B after round 0, 5.4E+232158 B by
-    round 11) until Catalyst's stats arithmetic throws "BigInteger
-    would overflow supported range" — found by the r12 fuzz campaign;
-    the pre-r12 connected_components loop had the same latent defect.
+    session: sizeInBytes 9.0E+75 B after iteration 0, 5.4E+232158 B
+    by iteration 11) until Catalyst's stats arithmetic throws
+    "BigInteger would overflow supported range" — found by a fuzz
+    campaign; the earlier connected_components loop had the same
+    latent defect.
     Caching first reduces the checkpointed plan to an
     InMemoryRelation whose stats are the ACTUAL materialized bytes,
     so the checkpoint inherits truth (measured: 2.0 KiB with a row
@@ -71,11 +72,12 @@ def iter_barrier(df: DataFrame, with_count: bool = False):
     loops), so the frame is returned still-cached. Loop frames are
     deliberately NOT unpersisted by callers in this mode: persist
     keeps lineage, so releasing a parent frame re-expands every later
-    plan back through the whole iteration history (measured OOM — see
-    the r12 SCALE.md entry); the cost of keeping them is bounded by
-    the loop's max_iter and MEMORY_AND_DISK evicts to disk rather
-    than OOM. Deep iterative loops should run under the default
-    localCheckpoint (or checkpoint) mode.
+    plan back through the whole iteration history (measured OOM by
+    iteration ~12 of a cached-only variant, docs/SCALE.md); the cost
+    of keeping them is bounded by the loop's max_iter and
+    MEMORY_AND_DISK evicts to disk rather than OOM. Deep iterative
+    loops should run under the default localCheckpoint (or checkpoint)
+    mode.
 
     ``with_count=True`` returns ``(frame, row_count)`` — the barrier
     already pays a count job to materialize the cache, so loop

@@ -43,7 +43,7 @@ def asof_join(
     (partitionBy treats NULL as a value), so a NULL-keyed left row
     would "match" a NULL-keyed right row — diverging from the
     correlated-subquery spec every SQL engine implements (found by
-    the r13 NULL-injection campaign). Left rows always pass through:
+    the NULL-injection campaign). Left rows always pass through:
     NULL-keyed or NULL-ts left rows simply match nothing.
     """
     right = right.filter(F.col(by).isNotNull() & F.col(on).isNotNull())

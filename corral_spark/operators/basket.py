@@ -41,7 +41,7 @@ def _guarded_pair_counts(
     """(item_a, item_b, c_ab) co-occurrence counts over a
     materialized distinct (b, i) table, item_a < item_b.
 
-    THE shared width-guarded pair generator (judge r8 ADVICE:
+    THE shared width-guarded pair generator (review advice:
     part_pagerank rebuilt this quadratic self-join without the
     guard association_rules has). Any basket wider than
     ``max_basket_width`` distinct items RAISES in-plan — a single
@@ -70,7 +70,7 @@ def _guarded_pair_counts(
         # widths is one row PER BASKET and pp one row per basket item —
         # both corpus-scaled (the width cap bounds basket SIZE, not
         # basket COUNT) — shuffle_hash per the corpus-scaled join
-        # rule (r16 broadcast audit).
+        # rule (broadcast audit).
         pp.select(F.col("b"), F.col("i").alias("item_a"))
         .join(widths.hint("shuffle_hash"), "b")
         .filter(width_ok)

@@ -132,11 +132,6 @@ def dedup_exact(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
     )
 
 
-def content_key(col: Column) -> Column:
-    """64-bit content hash for shuffling dedup keys instead of payloads."""
-    return F.xxhash64(col)
-
-
 # ---------------------------------------------------------------------------
 # Shingles
 # ---------------------------------------------------------------------------
@@ -171,7 +166,7 @@ def word_shingles_arrow(text: Column, n: int = 5) -> Column:
     occurrence order). UDFs are normally the slow path, but Spark's
     interpreted higher-order functions lose here by ~18x measured
     (see word_shingles); string n-gramming is exactly the vectorized-
-    Python sweet spot. Also measured (r2): a pure-JVM rolling
+    Python sweet spot. Also measured: a pure-JVM rolling
     xor-rotate hash over pre-materialized word-hash arrays lands at
     ~1.4s vs this UDF's ~1.2s at sf0.1 — no win, and it loses the
     string shingles the exact-verification joins reuse. (The naive
@@ -225,7 +220,7 @@ def bucket_pairs(keyed: DataFrame, key_col: str, id_col: str) -> DataFrame:
 
     left = slim.select(F.col("__k"), F.col("__p").alias("a"))
     right = slim.select(F.col("__k"), F.col("__p").alias("b"))
-    # CORPUS-SCALED JOIN RULE (r16, found by the sf3=30x canary): both
+    # CORPUS-SCALED JOIN RULE (found by the sf3=30x canary): both
     # sides here are the whole keyed corpus, but Catalyst's size
     # estimate reaches this join through parquet-scan bytes x
     # column-pruning ratios x explode/aggregate guesses and lands
@@ -1437,7 +1432,7 @@ def prefix_filter_jaccard_pairs(
     data.) Candidates are then verified with exact intersection
     counts over the candidate pairs only.
 
-    Three r11 additions (ablated at sf0.1 — registry query 20.0s ->
+    Three additions (ablated at sf0.1 — registry query 20.0s ->
     7.4s min-of-3 — with identical 964,854 output rows; sf1 56.3s ->
     35.1s with pairs exactly 10.0x):
 
@@ -1469,7 +1464,7 @@ def prefix_filter_jaccard_pairs(
       (safe direction; exact for any doc under ~10^6 distinct
       tokens, fractional parts of t*n for rational t are >> 1e-6).
 
-    One r16 exact reduction (guide §2.3 narrower types; outputs
+    One exact reduction (guide §2.3 narrower types; outputs
     proven exceptAll-identical both ways before landing):
 
     * **Dense BIGINT token ids end to end.** Candidate generation
@@ -1481,7 +1476,7 @@ def prefix_filter_jaccard_pairs(
       to 8 B longs. Measured at sf0.1: verification stage 2.91 ->
       1.36 s over the same 1,809,812 candidates.
 
-    Three r10 exact reductions (each preserves the qualifying pair
+    Three earlier exact reductions (each preserves the qualifying pair
     set bit-for-bit, re-proven by the unchanged TRUE-all-pairs
     oracle):
 
@@ -1548,7 +1543,7 @@ def _ppjoin_stages(
     ).filter(F.size("toks") > 0)
     # One row per DISTINCT token set; gid = min member id computed as
     # a window over partitionBy(toks) — ONE shuffle on the set key
-    # (r11: replaces groupBy(toks) + join-back-on-toks, which paid
+    # (replaces groupBy(toks) + join-back-on-toks, which paid
     # the same shuffle plus an array-keyed join). At 100 TB the
     # array-valued shuffle key is still the right call: hashing the
     # array would need a collision re-check anyway, and the shuffle
@@ -1576,7 +1571,7 @@ def _ppjoin_stages(
         F.size("toks").alias("n"),
     )
     dfreq = tok.groupBy("token").agg(F.count(F.lit(1)).alias("tdf"))
-    # r16 narrow-types rewrite (guide §2.3): every downstream consumer
+    # Narrow-types rewrite (guide §2.3): every downstream consumer
     # — the candidate equi-join, the positional filter, and the
     # verification intersect — needs only an INJECTIVE token identity,
     # never the string. A dense BIGINT id shrinks the widest join key
@@ -1604,7 +1599,7 @@ def _ppjoin_stages(
         ).alias("tid"),
     )
     # vocab is vocabulary-sized (corpus-scaled) — shuffle_hash per the
-    # corpus-scaled join rule (r16 broadcast audit). The GLOBAL token
+    # corpus-scaled join rule (broadcast audit). The GLOBAL token
     # order stays (tdf asc, token asc) — tid replaces the string only
     # as an identity, never as the ranking key.
     ranked = tok.join(vocab.hint("shuffle_hash"), "token").select(
@@ -1621,9 +1616,9 @@ def _ppjoin_stages(
     )
     # One checkpoint of the int-narrow ranked token table feeds BOTH
     # the prefix filter (pa/pb) and the per-group int-array rebuild —
-    # the join+window run once (before r16 only the ~10% prefix slice
-    # was checkpointed, but the verification arrays then had to stay
-    # strings).
+    # the join+window run once (before the narrow-types rewrite only
+    # the ~10% prefix slice was checkpointed, but the verification
+    # arrays then had to stay strings).
     ranked = materialize(ranked, eager=True)
     # Probe prefix p = n - ceil(t*n) + 1; the 1e-6 inside ceil only
     # ever LENGTHENS a prefix (docstring: float ceil can overshoot an
@@ -1709,7 +1704,7 @@ def _ppjoin_stages(
     # (|cands| x tokens-per-doc shuffle rows). Intersecting BIGINT
     # arrays instead of the original string arrays both narrows the
     # heaviest attach join's payload and replaces per-element string
-    # hashing with long equality (the r16 measurement above); the
+    # hashing with long equality (the measurement in the docstring); the
     # intersection SIZE is identical because token -> tid is
     # injective.
     va = gi.select(
@@ -1742,7 +1737,7 @@ def _ppjoin_stages(
     # membership self-join on gid; that join's per-key product IS
     # the output, and the shuffle_hash hint keeps a hot duplicate
     # class from hitting sort-merge's quadratic group rescan (the
-    # r10 fuzzy-join lesson).
+    # fuzzy-join lesson).
     ma = members.select(F.col("gid").alias("ga"), F.col("id").alias("ia"))
     mb = members.select(F.col("gid").alias("gb"), F.col("id").alias("ib"))
     cross = (

@@ -183,7 +183,7 @@ def _fuzzy_stages(
     # Requires id_col to uniquely identify rows (with duplicate ids
     # the text choice per pair was already nondeterministic).
     #
-    # Two r10 measured fixes on the self-join itself (sf0.1 customer
+    # Two measured fixes on the self-join itself (sf0.1 customer
     # lev<=2: join+dedup 32.4s -> 4.9s, ablated separately):
     # * SHUFFLE-HASH, never sort-merge. SMJ is pathological under
     #   hot variant keys (zero-run deletions collide): each
@@ -197,8 +197,8 @@ def _fuzzy_stages(
     #   partitions and each SHJ build must hold one WHOLE coalesced
     #   partition (measured at a 97M-row depth-2 index: 256
     #   partitions coalesced back to 43 and the build died with
-    #   "Can't acquire 64MB"; 16m advisory ran clean — SCALE.md
-    #   round-11). The max_block / cap_per_block guards already
+    #   "Can't acquire 64MB"; 16m advisory ran clean — SCALE.md).
+    #   The max_block / cap_per_block guards already
     #   bound the worst per-key product.
     # * Join on xxhash64(variant), not the variant STRING: the 8-byte
     #   key halves the shuffle bytes of the widest exchange in the
@@ -215,7 +215,7 @@ def _fuzzy_stages(
     # Both self-join sides consume the variant index; checkpoint it so
     # the O(len^d) explode (and any block guards) run ONCE, not once
     # per side. Only (id, key) is kept — the variant string itself
-    # never crosses the self-join on the exact path (r10), so drop it
+    # never crosses the self-join on the exact path, so drop it
     # before the barrier rather than carrying ~2x the bytes.
     ex = materialize(ex.select("id", key), eager=True)
     a = ex.select(F.col("id").alias("id_a"), "__k")
@@ -254,7 +254,7 @@ def fuzzy_counts(
     id_col: str,
     max_dist: int = 1,
 ) -> dict[str, int]:
-    """Scaling diagnostic (r10 verdict item 4): the two volume drivers
+    """Scaling diagnostic: the two volume drivers
     of the exact fuzzy join, as noise-free linearity evidence in the
     style of ``dedup.minhash_pair_counts``. On the marker-perturbed
     ``customer_fuzzy`` corpus (tools/scale_data.py) cross-replica

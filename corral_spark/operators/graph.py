@@ -12,7 +12,7 @@ Above it, the distributed path runs alternating large-star /
 small-star rounds (Kiveris et al. 2014): each round is a constant
 number of equi-join/groupBy shuffles and converges in O(log^2 n)
 rounds REGARDLESS of graph diameter — one-hop min-label propagation
-(the pre-r12 implementation) needs O(diameter) rounds and silently
+(the earlier implementation) needs O(diameter) rounds and silently
 mislabels chains longer than max_iter; non-fixpoint exit now raises.
 Per-round lineage is truncated with iter_barrier
 (corral_spark.materialize; cache -> count -> checkpoint -> unpersist)
@@ -51,7 +51,7 @@ def connected_components(
     (large-star/small-star) path below — O(log^2 n) rounds regardless
     of graph diameter; duplication chains in web-scale near-dup
     graphs routinely exceed ``max_iter`` HOPS, which silently broke
-    the pre-r12 one-hop label-propagation loop, and a non-fixpoint
+    the earlier one-hop label-propagation loop, and a non-fixpoint
     exit now raises instead of mislabeling.
     """
     spark = edges.sparkSession
@@ -67,7 +67,7 @@ def connected_components(
     # ~12s -> ~8s at sf0.1 warm).
     # Lazy barrier: the count() below is the first action and
     # materializes the checkpoint as a side effect — an eager
-    # materialize would pay one extra job for the same result (r16).
+    # materialize would pay one extra job for the same result.
     edges = materialize(edges, eager=False)
     n_edges = edges.count()
     if n_edges == 0:
@@ -117,12 +117,12 @@ def connected_components(
     # each round is a constant number of shuffles and the edge set
     # converges to a star per component in O(log^2 n) rounds (~10
     # measured on 3000-node adversarially-shuffled path graphs,
-    # ~5 on random graphs). The pre-r12 loop was one-hop min-label
+    # ~5 on random graphs). The earlier loop was one-hop min-label
     # propagation, which needs O(diameter) rounds: a duplication
     # CHAIN longer than max_iter — entirely plausible in the 2M+-edge
     # near-dup graphs that are the only inputs reaching this path —
     # exhausted the loop and returned silently-wrong labels (found by
-    # the r12 fuzz campaign's shuffled-chain graphs, where hop-only
+    # the fuzz campaign's shuffled-chain graphs, where hop-only
     # and hop+pointer-chase variants both ran 60+ rounds without
     # converging while two-phase took 10). Every per-round frame goes
     # through iter_barrier, not materialize: checkpoint stats
@@ -306,7 +306,7 @@ def bfs_hops(
     # grow only linearly (no self-join squaring — see
     # materialize.iter_barrier), sym is never the broadcast side, and
     # the dist anti-join's strategy doesn't change with stats.
-    # Canonicalize-then-mirror (r16): dedup ONE canonical (min, max)
+    # Canonicalize-then-mirror: dedup ONE canonical (min, max)
     # row per undirected edge, checkpoint it, and mirror the
     # checkpoint. The previous shape unioned both directions FIRST
     # and deduplicated the doubled table — twice the rows through the
@@ -340,18 +340,18 @@ def bfs_hops(
         )
         # New frontier: nodes not already reached at a smaller hop.
         # ``reached`` is already distinct and the anti-join only
-        # removes rows, so no re-distinct is needed (r16: was a
+        # removes rows, so no re-distinct is needed (was a
         # redundant exchange per hop).
         frontier = reached.join(dist.select("node"), "node", "left_anti")
         # with_count folds the loop-exit emptiness check into the
-        # count job the barrier already pays (r13: was a separate
+        # count job the barrier already pays (was a separate
         # isEmpty job per hop).
         frontier, n_frontier = iter_barrier(frontier, with_count=True)
         if n_frontier == 0:
             break
         # Lazy union of ALREADY-CHECKPOINTED frames: each hop's
         # frontier is its own barrier, so re-materializing the whole
-        # accumulated distance table every hop (r16: one count job +
+        # accumulated distance table every hop (one count job +
         # one O(|dist|) checkpoint write per hop) bought nothing —
         # the union's leaves never recompute and its depth is bounded
         # by max_hops.
@@ -468,7 +468,7 @@ def pagerank_fixed_point(
     Output: (node, pr_e12) with pr_e12 the scaled BIGINT rank after
     ``iters`` rounds from a uniform start (scale DIV n per node).
     """
-    # Canonicalize-then-mirror (r16, the bfs_hops shape): dedup ONE
+    # Canonicalize-then-mirror (the bfs_hops shape): dedup ONE
     # canonical (least, greatest) row per undirected edge, checkpoint
     # it, and mirror the checkpoint — half the rows through the
     # distinct's exchange, one subtree compute, and the stored
@@ -513,7 +513,7 @@ def pagerank_fixed_point(
             .groupBy("v")
             .agg(F.sum("contrib").alias("s"))
         )
-        # Plain materialize, NOT iter_barrier (r13 ablation, calm
+        # Plain materialize, NOT iter_barrier (ablation, calm
         # epoch, min-of-3 sf0.1: 2.91s vs 3.93s): unlike the BFS
         # frontier, ranks is one row PER NODE — at 100x node counts
         # it is never the broadcastable side of the contribution

@@ -93,13 +93,13 @@ def apply_agg_delta(
     NULL-keyed group then sees snapshot-side 0 and trips the
     negative-count guard (loud), and an insert-only delta silently
     DUPLICATES the group instead (both unmatched rows survive the
-    full outer). Found by the r13 NULL-injection campaign.
+    full outer). Found by the NULL-injection campaign.
     """
     s = F.col(sign_col)
     # Companion NON-NULL-contribution counts: a maintained NULLABLE
     # SUM cannot distinguish "sums to zero" from "has no non-null
     # contributions left" after deletes — SQL's SUM over an all-NULL
-    # group is NULL, and the r14 layered-corruption campaign caught
+    # group is NULL, and the layered-corruption campaign caught
     # the maintained state reading 0.0 there. When the snapshot
     # carries ``<col>__nn`` columns (COUNT(col) at snapshot build),
     # they are maintained alongside and the sum is emitted as NULL
@@ -208,7 +208,7 @@ def refresh_affected_groups(
     NULL-keyed touched group would otherwise neither select its base
     rows for recompute nor evict its stale snapshot row (anti-join
     keeps non-matches), silently carrying the old aggregate forward
-    (found by the r13 NULL-injection campaign).
+    (found by the NULL-injection campaign).
     """
     touched = touched_keys.select(*key_cols).distinct()
 

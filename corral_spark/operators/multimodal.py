@@ -335,7 +335,7 @@ def assets_from_documents(docs: DataFrame) -> DataFrame:
     (ingestion would have nothing to write), and downstream
     Arrow-batched decoders receive ``bytes`` per row by contract —
     without the filter a NULL reaches ``bytes(None)`` and kills the
-    whole batch (r13 NULL-injection campaign). Mirrored in the
+    whole batch (found by the NULL-injection campaign). Mirrored in the
     multimodal_features oracle as ``text IS NOT NULL``."""
     docs = docs.filter(F.col("text").isNotNull())
     return docs.select(

@@ -85,7 +85,7 @@ def learn_phrases(
     (reference word-count tokenizer) plus ``joiner`` from earlier
     rounds, so the merge pattern is always regex-literal-safe.
 
-    **Cost bound (explicit, r11 verdict item 5):** each of the k
+    **Cost bound (explicit):** each of the k
     rounds is (a) one FULL corpus scan for the bigram count
     aggregation, (b) one single-row collect, and (c) one FULL corpus
     REWRITE — the double ``regexp_replace`` over every document,

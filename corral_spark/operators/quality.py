@@ -35,14 +35,6 @@ def normalize_text(col: Column) -> Column:
     return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
 
 
-def null_report(df: DataFrame, cols: list[str]) -> DataFrame:
-    """One-row report: total rows + null count per column, single pass."""
-    aggs = [F.count(F.lit(1)).alias("n_rows")] + [
-        F.sum(F.col(c).isNull().cast("long")).alias(f"nulls_{c}") for c in cols
-    ]
-    return df.agg(*aggs)
-
-
 def duplicate_key_report(df: DataFrame, key_cols: list[str]) -> DataFrame:
     """Keys violating uniqueness, with their multiplicities."""
     return (

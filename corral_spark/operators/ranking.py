@@ -52,7 +52,7 @@ def global_row_number(
     same ascending null ordering) and the within-partition window
     ranks them first. Oracles replaying a rank derived from this
     function must therefore say ``ORDER BY ... NULLS FIRST`` (DuckDB
-    ASC defaults to NULLS LAST — the r13 NULL-campaign class-1
+    ASC defaults to NULLS LAST — the NULL-campaign class-1
     divergence).
     """
     from corral_spark.materialize import materialize
@@ -170,7 +170,7 @@ def with_exclusive_prefix_sum(
     ``value_col`` MUST be an integral type, or a scale-0 decimal
     with precision <= 18 — both accumulate in BIGINT exactly; a
     per-row cast of a fractional type would truncate each value
-    before summing (judge r8/r9 ADVICE). Pre-scale fractional
+    before summing (review advice). Pre-scale fractional
     weights to integers (e.g. cents) before calling.
     """
     from pyspark.sql.types import (
@@ -185,7 +185,7 @@ def with_exclusive_prefix_sum(
 
     vt = df.schema[value_col].dataType
     # Scale-0 decimals are exact integers and accumulate in BIGINT
-    # without truncation (judge r9 ADVICE): accept them when they
+    # without truncation (review advice): accept them when they
     # provably fit a long (precision <= 18), via the same
     # cast("long") both sum sites already apply.
     dec_ok = (

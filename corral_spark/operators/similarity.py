@@ -38,8 +38,8 @@ def valid_vecs(
     containing NULL elements, zero-norm vectors, and (when ``dim`` is
     given) wrong-length vectors.
 
-    NULL is absence of a vector (the r13 COUNT(DISTINCT) convention);
-    the r14 extreme-value campaign extended the rule to the other
+    NULL is absence of a vector (the COUNT(DISTINCT) convention);
+    the extreme-value campaign extended the rule to the other
     degenerate shapes 100 TB production data actually contains: a
     zero vector has no direction (cosine is 0/0 — NaN, with
     engine-specific NaN ordering downstream), a NULL element or a
@@ -391,7 +391,7 @@ def ivf_topk(
     assigned = ivf_assign(corpus, centroids, id_col, vec_col)
 
     # Which cells does each query probe? ONE broadcast build for the
-    # centroid frame (r17, r16 verdict item 7): the previous shape
+    # centroid frame: the previous shape
     # broadcast the checkpointed centroids a SECOND time here, and
     # Spark cannot reuse the assignment's exchange — broadcast builds
     # over LogicalRDD (checkpoint) scans never canonicalize as the

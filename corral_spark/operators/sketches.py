@@ -377,7 +377,7 @@ def bloom_might_contain(
     the caller already knows them (bloom_new_rows does) — otherwise
     ``bf`` is MATERIALIZED first and the params read from it: the
     filter build is a lazy corpus-sized aggregation (no driver
-    collect since round 6), so without the checkpoint the ``first()``
+    collect), so without the checkpoint the ``first()``
     here AND the broadcast below would each recompute the whole
     build."""
     if m_bits is None or k is None:
@@ -433,7 +433,7 @@ def bloom_new_rows(
     maybe = flagged.filter(F.col("__might")).drop("__might")
     verified_new = maybe.join(
         # The existing-keys side is the WHOLE existing corpus's
-        # distinct keys — corpus-scaled; the r16 broadcast audit
+        # distinct keys — corpus-scaled; the broadcast audit
         # caught Catalyst building it as a driver broadcast (full
         # document texts in the registry query). shuffle_hash per
         # the corpus-scaled join rule. The bloom pass above already

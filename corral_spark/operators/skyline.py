@@ -43,7 +43,7 @@ def skyline_min_max(
     do not dominate each other, so both survive.
 
     Both dimension columns must be non-NULL: a row with a NULL
-    dimension raises in-plan (judge r8 ADVICE — the equi-join back
+    dimension raises in-plan (review advice — the equi-join back
     would silently drop it while the NOT-EXISTS spec keeps it).
 
     Derivation (2-D sort-based skyline): row p survives iff
@@ -81,7 +81,7 @@ def skyline_min_max(
     # MATERIALIZED before anything reads it: the partition-maxima
     # pass and the final filter must observe the SAME physical range
     # partitioning (repartitionByRange re-samples boundaries per
-    # job — the global_row_number lesson, SCALE.md round 8).
+    # job — the global_row_number lesson, SCALE.md).
     ranged = materialize(
         per_x.repartitionByRange(n_part, min_col).withColumn(
             "__pid", F.spark_partition_id()

@@ -50,7 +50,7 @@ def text_stats(
 
     # Ratios are defined only for non-empty documents: guard the
     # divisions so an empty/whitespace-only text yields NULL stats
-    # instead of an ANSI DIVIDE_BY_ZERO (r14 extreme-value campaign;
+    # instead of an ANSI DIVIDE_BY_ZERO (extreme-value campaign;
     # the oracle mirrors with CASE WHEN len(words) > 0).
     avg_word_len = F.when(
         n_words > 0, total_chars.cast("double") / n_words
@@ -188,7 +188,7 @@ def unigram_logprob(df: DataFrame, text_col: str = "text") -> DataFrame:
     and average ln(count/total). The model side is vocabulary-sized
     (sublinear in corpus size), so the join is left hint-free: AQE
     picks broadcast when the vocab fits the threshold and falls back
-    to shuffle when it doesn't — the round-1 verdict's lesson about
+    to shuffle when it doesn't — the early review lesson about
     unconditional broadcast hints applied. The single-row total is
     always broadcast."""
     toks = df.select("doc_id", F.explode(tokenize(F.col(text_col))).alias("term"))
@@ -205,7 +205,7 @@ def unigram_logprob(df: DataFrame, text_col: str = "text") -> DataFrame:
     model = counts.crossJoin(F.broadcast(total))
     return (
         # model is vocabulary-sized (corpus-scaled) — shuffle_hash per
-        # the corpus-scaled join rule (r16 broadcast audit); only the
+        # the corpus-scaled join rule (broadcast audit); only the
         # one-row total broadcasts.
         toks.join(model.hint("shuffle_hash"), "term")
         .groupBy("doc_id")

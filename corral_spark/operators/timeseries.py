@@ -33,8 +33,8 @@ def time_bucket(col: Column | str, width_seconds: int) -> Column:
 
 def event_micros(df: DataFrame, col: str) -> Column:
     """Exact integer microsecond position of an event-time column
-    under BOTH halves of the event-time contract (r14, SCALE.md
-    round-14): TIMESTAMP_NTZ (the batch wall clock) via
+    under BOTH halves of the event-time contract (SCALE.md):
+    TIMESTAMP_NTZ (the batch wall clock) via
     timestampdiff against the NTZ epoch — pure wall arithmetic,
     host-TZ-independent; TIMESTAMP (streaming instants) via
     unix_micros. Callers must only rely on DIFFERENCES and ORDERING
@@ -83,7 +83,7 @@ def gapfill_locf(
         lo = int(bounds["lo"]) if lo is None else lo
         hi = int(bounds["hi"]) if hi is None else hi
 
-    # Loud spine-size guard (r14 extreme campaign): ONE corrupt
+    # Loud spine-size guard (extreme-value campaign): ONE corrupt
     # bucket value (a year-2199 timestamp in a 1-week series) makes
     # the dense spine explode to billions of rows PER KEY — at
     # 100 TB that is an outage, not a result. Raising beats silently
@@ -149,7 +149,7 @@ def rolling_range_agg(
 
     The window sum runs in exact DECIMAL (functions.det.dec), not raw
     doubles: at extreme magnitudes (one 1e15 value among cents — the
-    r14 extreme campaign's planted case) a double accumulation is
+    extreme-value campaign's planted case) a double accumulation is
     order-dependent in its last bits, and window frames re-add values
     in engine-specific orders. The decimal sum is order-free; both
     engines then perform the identical single double rounding.

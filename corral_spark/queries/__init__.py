@@ -1,5 +1,6 @@
 """Declared query registry — every operator from SURVEY.md §2 appears
-here as a named (Spark DataFrame fn, DuckDB oracle SQL) pair.
+here as a named (Spark DataFrame fn, DuckDB oracle SQL) pair, grouped
+into one module per family.
 
 Importing this package populates ``REGISTRY`` via module side effects.
 """
@@ -8,22 +9,12 @@ from corral_spark.queries.registry import REGISTRY, Query, register
 
 # Import for side effect: each module registers its queries.
 from corral_spark.queries import relational as _relational  # noqa: E402,F401
-from corral_spark.queries import relational2 as _relational2  # noqa: E402,F401
-from corral_spark.queries import relational3 as _relational3  # noqa: E402,F401
-from corral_spark.queries import relational4 as _relational4  # noqa: E402,F401
-from corral_spark.queries import extensions as _extensions  # noqa: E402,F401
-from corral_spark.queries import extensions2 as _extensions2  # noqa: E402,F401
-from corral_spark.queries import extensions3 as _extensions3  # noqa: E402,F401
-from corral_spark.queries import extensions4 as _extensions4  # noqa: E402,F401
-from corral_spark.queries import extensions5 as _extensions5  # noqa: E402,F401
-from corral_spark.queries import extensions6 as _extensions6  # noqa: E402,F401
-from corral_spark.queries import extensions7 as _extensions7  # noqa: E402,F401
-from corral_spark.queries import extensions8 as _extensions8  # noqa: E402,F401
-from corral_spark.queries import extensions9 as _extensions9  # noqa: E402,F401
-from corral_spark.queries import extensions10 as _extensions10  # noqa: E402,F401
-from corral_spark.queries import extensions11 as _extensions11  # noqa: E402,F401
-from corral_spark.queries import extensions12 as _extensions12  # noqa: E402,F401
-from corral_spark.queries import extensions13 as _extensions13  # noqa: E402,F401
+from corral_spark.queries import analytics as _analytics  # noqa: E402,F401
+from corral_spark.queries import dedup as _dedup  # noqa: E402,F401
+from corral_spark.queries import retrieval as _retrieval  # noqa: E402,F401
+from corral_spark.queries import sketches as _sketches  # noqa: E402,F401
+from corral_spark.queries import text as _text  # noqa: E402,F401
+from corral_spark.queries import hygiene as _hygiene  # noqa: E402,F401
 from corral_spark.queries import streaming_q as _streaming  # noqa: E402,F401
 
 __all__ = ["REGISTRY", "Query", "register"]

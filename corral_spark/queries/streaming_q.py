@@ -15,10 +15,6 @@ from corral_spark.streaming.ops import session_agg, sliding_agg, tumbling_agg
 _SUM_VALUE_SQL = "CAST(SUM(TRY_CAST(value AS DECIMAL(12,2))) AS DOUBLE)"
 
 
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "events")
-
-
 @register(
     "events_tumbling_1h",
     oracle=f"""
@@ -38,7 +34,7 @@ def events_tumbling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour windowed aggregation (streaming.ops.
     tumbling_agg): the Structured Streaming workhorse, here in its
     batch-equivalent form."""
-    return tumbling_agg(_events(spark, sf_dir), "1 hour").orderBy(
+    return tumbling_agg(load_table(spark, sf_dir, "events"), "1 hour").orderBy(
         "window_start", "event_type"
     )
 
@@ -71,9 +67,9 @@ def events_sliding_1h_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding window (1h length, 30m slide): every event contributes
     to exactly two windows; the oracle explodes each row into its two
     window starts (30-minute truncation and the preceding one)."""
-    return sliding_agg(_events(spark, sf_dir), "1 hour", "30 minutes").orderBy(
-        "window_start"
-    )
+    return sliding_agg(
+        load_table(spark, sf_dir, "events"), "1 hour", "30 minutes"
+    ).orderBy("window_start")
 
 
 @register(
@@ -102,13 +98,13 @@ def event_props_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     try_cast, not cast, on the heterogeneous map values: under an
     ANSI session a plain CAST raises CAST_INVALID_INPUT on the first
     non-numeric value — at 100 TB schema-on-read, one malformed
-    value would kill the query (r13 unicode campaign class 3). A
+    value would kill the query (unicode campaign class 3). A
     value that isn't a number contributes NULL to the SUM on both
     engines (DuckDB TRY_CAST mirrors it)."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import MapType, StringType
 
-    events = _events(spark, sf_dir)
+    events = load_table(spark, sf_dir, "events")
     m = F.from_json("props", MapType(StringType(), StringType()))
     return (
         events.select(F.explode(m).alias("prop_key", "v"))
@@ -223,6 +219,6 @@ def events_session_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     session_window (streaming.ops.session_agg). The oracle reproduces
     Spark's merge rule (gap >= 30m starts a new session; session end =
     last event + gap) with the lag()+cumulative-sum idiom."""
-    return session_agg(_events(spark, sf_dir), "30 minutes").orderBy(
+    return session_agg(load_table(spark, sf_dir, "events"), "30 minutes").orderBy(
         "user_id", "session_start"
     )

@@ -92,8 +92,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = read_parquet(spark, table_path(sf_dir, name))
     if name == "events":
-        # EVENT-TIME WALL-CLOCK CONTRACT (r14 TZ-sensitivity probe,
-        # SCALE.md round-14): ``ts`` is TIMESTAMP_NTZ — a naive wall
+        # EVENT-TIME WALL-CLOCK CONTRACT (TZ-sensitivity probe,
+        # SCALE.md): ``ts`` is TIMESTAMP_NTZ — a naive wall
         # clock — from load to render, so every window alignment,
         # truncation, and strftime-style rendering is HOST-TIMEZONE-
         # INDEPENDENT and matches what any wall-clock engine (incl.

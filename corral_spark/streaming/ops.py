@@ -29,7 +29,7 @@ def _fmt(col) -> F.Column:
 
 
 def _wall_renderer(events: DataFrame):
-    """Session-TZ-independent window-bound renderer (closes the r14
+    """Session-TZ-independent window-bound renderer (closes the
     event-time contract's streaming residual).
 
     Batch frames carry TIMESTAMP_NTZ event time (the contract), so
@@ -38,7 +38,7 @@ def _wall_renderer(events: DataFrame):
     wall-as-UTC by read_events_stream — but ``date_format`` renders
     an instant in the SESSION zone, so a non-UTC reader of the same
     checkpointed sink output used to see shifted strings (the
-    residual noted since r14). Render the instant's UTC wall
+    contract's streaming residual). Render the instant's UTC wall
     explicitly instead: CAST to NTZ gives the session-zone wall,
     convert_timezone shifts it back to the UTC wall — the session TZ
     cancels, leaving exactly the wall clock the ingress mapping
@@ -103,15 +103,15 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    # EVENT-TIME CONTRACT, streaming half (r14 TZ probe, SCALE.md
-    # round-14): Spark watermarks REQUIRE TIMESTAMP
+    # EVENT-TIME CONTRACT, streaming half (TZ-sensitivity probe,
+    # SCALE.md): Spark watermarks REQUIRE TIMESTAMP
     # (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE rejects NTZ), so the
     # stream keeps INSTANTS — mapped TZ-INDEPENDENTLY as
     # instant-epoch == wall-clock-as-UTC, which makes window
     # ALIGNMENT wall-correct under any host timezone. (Batch event
     # time is TIMESTAMP_NTZ end to end — load_table.) Rendered
     # strings from the streaming path are made session-TZ-independent
-    # by _wall_renderer (r16 — formerly the contract's one open
+    # by _wall_renderer (formerly the contract's one open
     # residual): instants render as their UTC wall, i.e. exactly the
     # wall clock this ingress mapping encoded, so a cross-TZ reader
     # of a CDC/rollup sink written under any session zone sees
@@ -149,13 +149,13 @@ def tumbling_agg(events: DataFrame, window: str = "1 hour") -> DataFrame:
     watermark convention: event-time operators define their input as
     timestamped rows; under streaming a NULL event time is never
     admitted past the watermark). Dropped explicitly here so batch
-    and streaming forms agree — r13 NULL-campaign class 2.
+    and streaming forms agree — NULL-campaign class 2.
 
     Windows align on the WALL CLOCK: ``ts`` is TIMESTAMP_NTZ by the
     event-time contract (sources.tables.load_table /
-    read_events_stream — r14 TZ-sensitivity probe, SCALE.md
-    round-14), so F.window aligns hour boundaries to wall hours
-    under ANY host timezone; an instant-typed ts aligned them to
+    read_events_stream — TZ-sensitivity probe, SCALE.md), so
+    F.window aligns hour boundaries to wall hours under ANY host
+    timezone; an instant-typed ts aligned them to
     UTC epoch hours (= :45 local under a +05:45 host) — the
     registry's only environment-sensitive rows before the
     contract."""
@@ -431,7 +431,7 @@ def foreach_batch_upsert_sink(
     — the streaming dimension-table-maintenance pattern (no
     transactional table format required).
 
-    INCREMENTAL by hash bucket (r5 verdict item 2): the snapshot is
+    INCREMENTAL by hash bucket: the snapshot is
     hash-clustered into ``n_buckets`` buckets on ``key_col`` (the
     `sources/layout.py` write-clustering discipline, hash flavor), and
     a micro-batch rewrites ONLY the buckets its keys land in. I/O per
@@ -476,7 +476,7 @@ def foreach_batch_upsert_sink(
     test_streaming_restart). Bulk parquet data always flows through
     Spark's own Hadoop filesystem regardless of the seam.
 
-    Upgrading a pre-manifest table (the round-5 full-snapshot layout,
+    Upgrading a pre-manifest table (the earlier full-snapshot layout,
     version dirs with no manifest.json): keep its checkpoint — the
     first new batch detects the newest legacy full snapshot below its
     batch id, reads it whole, and rewrites EVERY bucket once (a
@@ -721,7 +721,7 @@ def _latest_plain_version(
     table_dir: str, below: int | None = None, fs=None
 ):
     """Newest UNcommitted version directory — a full snapshot written
-    by the pre-manifest (round-5) sink. None if absent. Callers MUST
+    by the pre-manifest sink. None if absent. Callers MUST
     validate the candidate with _assert_genuine_legacy before treating
     it as a full snapshot."""
     return _latest_version_dir(table_dir, below, committed=False, fs=fs)
@@ -729,7 +729,7 @@ def _latest_plain_version(
 
 def _assert_genuine_legacy(table_dir: str, legacy_v: int, fs=None) -> None:
     """Refuse to 'migrate' crash debris as a legacy full snapshot. A
-    genuine pre-manifest (round-5) snapshot has plain parquet files in
+    genuine pre-manifest snapshot has plain parquet files in
     its version dir; a NEW-layout version left by a crashed batch has
     ``__bucket=`` partition subdirectories. If the checkpoint was lost
     or rebuilt (batch ids restart at 0), such debris could otherwise

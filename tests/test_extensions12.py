@@ -31,7 +31,7 @@ def test_bm25_tf_and_length_normalization(spark, tmp_path):
     occurrences score higher; with equal tf, a longer document scores
     lower (the b-normalization). Docs without any query term are
     absent."""
-    from corral_spark.queries.extensions12 import bm25_top_docs
+    from corral_spark.queries.retrieval import bm25_top_docs
 
     pad = "filler "
     rows = [
@@ -50,7 +50,7 @@ def test_bm25_tf_and_length_normalization(spark, tmp_path):
 def test_bm25_multi_term_additivity(spark, tmp_path):
     """A doc matching two query terms outranks single-term docs of the
     same shape, and n_terms counts matched terms."""
-    from corral_spark.queries.extensions12 import bm25_top_docs
+    from corral_spark.queries.retrieval import bm25_top_docs
 
     pad = "filler "
     rows = [
@@ -72,7 +72,7 @@ def test_bm25_multi_term_additivity(spark, tmp_path):
 def test_psi_zero_on_identical_snapshots(spark, tmp_path):
     """Identical ref/cur distributions -> every PSI term is exactly 0
     (q == p makes (q-p)*ln(q/p) == 0 before quantization)."""
-    from corral_spark.queries.extensions12 import psi_drift_docs
+    from corral_spark.queries.hygiene import psi_drift_docs
 
     rows = []
     for i, (lang, n) in enumerate(
@@ -91,7 +91,7 @@ def test_psi_flags_planted_shift(spark, tmp_path):
     """A language present only in the current snapshot produces a
     strictly positive PSI term and feature total; totals are the
     exact bigint sum of the per-bin terms."""
-    from corral_spark.queries.extensions12 import psi_drift_docs
+    from corral_spark.queries.hygiene import psi_drift_docs
 
     rows = [(i, "t", "en", "src0", 100) for i in range(20)]
     rows += [(100 + i, "t", "zh", "src10", 100) for i in range(20)]

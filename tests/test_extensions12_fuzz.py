@@ -79,7 +79,7 @@ def test_psi_nonnegative_and_symmetric_under_swap(spark, tmp_path):
     """PSI terms are always >= 0 ((q-p) and ln(q/p) share sign), and
     swapping the ref/cur roles preserves every term exactly (the
     formula is symmetric in (p, q))."""
-    from corral_spark.queries.extensions12 import psi_drift_docs
+    from corral_spark.queries.hygiene import psi_drift_docs
 
     rng = random.Random(7)
     rows = []

@@ -106,8 +106,8 @@ def test_anomaly_screen_fully_corrupted_cell_reports_zero(spark):
     not NULL (what SUM over an all-NULL flag column yields)."""
     import pandas as pd
 
-    from corral_spark.queries.extensions10 import event_hourly_anomalies
-    from corral_spark.queries import streaming_q
+    from corral_spark.queries import analytics
+    from corral_spark.queries.analytics import event_hourly_anomalies
 
     pdf = pd.DataFrame(
         {
@@ -131,15 +131,15 @@ def test_anomaly_screen_fully_corrupted_cell_reports_zero(spark):
         }
     )
     df = spark.createDataFrame(pdf)
-    orig = streaming_q._events
-    streaming_q._events = lambda s, d: df
+    orig = analytics.load_table
+    analytics.load_table = lambda s, d, name: df
     try:
         out = {
             (r["event_type"], r["hr"]): r
             for r in event_hourly_anomalies(spark, "unused").collect()
         }
     finally:
-        streaming_q._events = orig
+        analytics.load_table = orig
     corrupt = out[("corrupt", 5)]
     assert corrupt["avg_value"] is None
     assert corrupt["n_anomalies"] == 0

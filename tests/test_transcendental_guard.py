@@ -39,13 +39,9 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-from corral_spark.queries.extensions12 import (
-    _BM25_B,
-    _BM25_K1,
-    _BM25_TERMS,
-    _PSI_NBIN,
-    _TOK_SQL,
-)
+from corral_spark.functions.text import TOKENIZE_SQL as _TOK_SQL
+from corral_spark.queries.hygiene import _PSI_NBIN
+from corral_spark.queries.retrieval import _BM25_B, _BM25_K1, _BM25_TERMS
 from tests.conftest import SF_CORRECT
 
 #: minimum allowed |frac(value * 10^k) - 0.5| — units of the last
@@ -246,7 +242,7 @@ def test_psi_probe_boundary_distances(con):
     # probe's lnr_micro = round(round(ln,6)*1e6) is integral by
     # construction (distance exactly 0.5) and the underlying 6dp ln
     # is covered by test_psi_boundary_distances.
-    from corral_spark.queries.extensions13 import _PSI_PROBE_BASE
+    from corral_spark.queries.hygiene import _PSI_PROBE_BASE
 
     for v in ("p", "q"):
         d = _min_dist(

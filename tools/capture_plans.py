@@ -1,9 +1,9 @@
-"""Capture .explain("formatted") for a set of registry queries into
-plans/<tag>/<query>_<suffix>.txt (r16 optimization-round evidence:
-the judge checks plan claims against these files).
+"""Capture .explain("formatted") for a set of registry queries at sf0.1
+into <out_dir>/<query>_<suffix>.txt, for before/after plan comparisons.
 
-Usage: python tools/capture_plans.py <tag> <suffix> [query ...]
-Defaults to the headline set when no query names are given.
+Usage: python tools/capture_plans.py <out_dir> <suffix> [query ...]
+Defaults to the headline set when no query names are given. Write the
+plans outside the repository (a scratch directory).
 """
 
 from __future__ import annotations
@@ -15,14 +15,13 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 def main() -> None:
-    tag, suffix = sys.argv[1], sys.argv[2]
+    out_dir, suffix = Path(sys.argv[1]), sys.argv[2]
     names = sys.argv[3:]
     from corral_spark.queries import REGISTRY
     from corral_spark.session import local_session
 
     if not names:
         names = [n for n, q in REGISTRY.items() if q.headline]
-    out_dir = Path(__file__).resolve().parent.parent / "plans" / tag
     out_dir.mkdir(parents=True, exist_ok=True)
     spark = local_session("corral_spark-plans")
     spark.sparkContext.setLogLevel("ERROR")
