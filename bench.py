@@ -7,7 +7,7 @@ the compact contract line the driver parses (LAST on stdout):
 "queries": {name: min_sec}, "probe": {...}, "sf": ..., "sf1": {...}}.
 The split exists because the driver captures only the final 2000
 chars of stdout — with the runs arrays inline the contract line
-outgrew the window every round since r8 and recorded "parsed": null.
+outgrew that window and recorded "parsed": null.
 The "probe" fields (tools/hostprobe.light_probe, repeated inside
 "sf1" as "probe") make each recorded bench self-adjudicating against
 host-epoch drift: compare py_single_ms/scan_mb_s across rounds before
@@ -17,8 +17,7 @@ Each query is executed to completion (count() of the final result —
 every declared query is an agg/top-k, so result sets are small and the
 full plan runs; nothing is collected to the driver beyond counts).
 
-The "sf1" section is a per-round scaling canary (judge round-2 item
-7): the two dedup headliners re-timed (min-of-2, so the number is a
+The "sf1" section is a scaling canary: the two dedup headliners re-timed (min-of-2, so the number is a
 warm engine cost comparable to the min-of-3 base timings, not a cold
 first-touch) at a synthetic 10x dataset
 (tools/scale_data.py — disjoint-key replication, so candidate pairs
@@ -64,12 +63,12 @@ def main() -> None:
     from corral_spark.session import codegen_compiles, local_session
     from tools.hostprobe import light_probe
 
-    # Self-adjudicating epoch evidence (r11 verdict item 2): the
-    # driver benches after snapshot, so its host epoch could never be
-    # probed after the fact — BENCH_r11's sf1 readings sat 2.3x above
-    # two same-code builder/judge re-measurements with every count
-    # canary exactly 10.0x. Probe INSIDE the output, immediately
-    # before the headline loop and again before the sf1 block.
+    # Self-adjudicating epoch evidence: a recorded bench runs after
+    # snapshot, so its host epoch could never be probed after the fact
+    # — BENCH_r11's sf1 readings sat 2.3x above two same-code
+    # re-measurements with every count canary exactly 10.0x. Probe
+    # INSIDE the output, immediately before the headline loop and
+    # again before the sf1 block.
     probe_open = light_probe()
 
     spark = local_session("corral_spark-bench")
@@ -91,19 +90,18 @@ def main() -> None:
         word_shingles_arrow(F.lit("warm up the python workers"), 2)
     ).count()
 
-    # min-of-3, INTERLEAVED round-robin (r6 verdict item 2): three
-    # passes over the whole query list rather than three consecutive
-    # runs per query, min taken across passes. A local[32] single-JVM
+    # min-of-3, INTERLEAVED round-robin: three passes over the whole
+    # query list rather than three consecutive runs per query, min
+    # taken across passes. A local[32] single-JVM
     # host sees scheduler/JIT/GC noise of up to 3x run-to-run
-    # (measured), and the noise arrives in WINDOWS — the r6 recorded
+    # (measured), and the noise arrives in WINDOWS — one recorded
     # artifact had one bad window poison all three consecutive runs of
     # pricing_summary/shipping_priority/regional_revenue and fabricate
     # 2.3-3.3x regressions the judge had to re-litigate. Round-robin
     # makes a query's three samples come from disjoint time windows,
     # so min-of-3 survives any single noise window. ALL run times are
-    # recorded alongside the min (r4 verdict item 3) so
-    # round-over-round deltas can be judged against the host's actual
-    # variance instead of a single sample.
+    # recorded alongside the min so run-over-run deltas can be judged
+    # against the host's actual variance instead of a single sample.
     all_runs: dict[str, list[float]] = {n: [] for n in bench_queries}
     compiles0 = codegen_compiles(spark)
     for _pass in range(3):
@@ -129,8 +127,8 @@ def main() -> None:
     # Full per-run arrays go on this EARLIER diagnostic line, not the
     # final one: the driver captures only the last 2000 chars of
     # stdout and json-parses the final line, and with the runs dicts
-    # inline the final line outgrew the window every round since r8
-    # ("parsed": null, tail starting mid-object — r11 verdict item 3).
+    # inline the final line outgrew the window ("parsed": null, tail
+    # starting mid-object).
     # The final line below is kept compact (mins + ratios only) so it
     # always fits and parses; builder-run logs retain both lines.
     diag = {"diag": "runs", "runs": all_runs, "codegen_compiles": compiles}
@@ -156,11 +154,11 @@ def main() -> None:
             "pretrain_corpus",
             "gram_dedup_docs",
         )
-        # min-of-3, interleaved round-robin — the same fix the sf0.1
-        # loop got in r6 (one bad host window must not poison all of a
-        # query's samples); raised from min-of-2 per the r7 verdict
-        # item 2 so the sf1 drift canary has the same noise floor as
-        # the headline set. First pass pays the sf1 scan cache.
+        # min-of-3, interleaved round-robin — the same fix as the sf0.1
+        # loop (one bad host window must not poison all of a query's
+        # samples); min-of-3 rather than min-of-2 so the sf1 drift
+        # canary has the same noise floor as the headline set. First
+        # pass pays the sf1 scan cache.
         sf1_runs: dict[str, list[float]] = {n: [] for n in _sf1_names}
         for _pass in range(3):
             for name in _sf1_names:
@@ -169,8 +167,8 @@ def main() -> None:
                 sf1_runs[name].append(round(time.perf_counter() - t0, 3))
                 _clear_storage(spark)
         sf1_timings = {n: min(r) for n, r in sf1_runs.items()}
-        # Noise-free linearity evidence (r4 verdict item 1): candidate
-        # and verified-pair COUNTS at both scales. The sf1 corpus is
+        # Noise-free linearity evidence: candidate and verified-pair
+        # COUNTS at both scales. The sf1 corpus is
         # token-renamed disjoint replicas, so true pairs are exactly
         # 10x and candidates must be ~10x; a superlinear candidates
         # ratio is a real O(n^2) LSH artifact, while a superlinear
@@ -194,17 +192,16 @@ def main() -> None:
             )
             _clear_storage(spark)
             # Same noise-free discipline for the sliding-gram dedup
-            # headliner (r5 verdict item 4): its k-way coverage
-            # explode is the largest intermediate in the engine, so
-            # its row counts — not the wall clock — are the
-            # superlinearity tripwire.
+            # headliner: its k-way coverage explode is the largest
+            # intermediate in the engine, so its row counts — not the
+            # wall clock — are the superlinearity tripwire.
             gcounts[label] = gram_dedup_counts(docs, "text", "doc_id", k=8)
             _clear_storage(spark)
             # Cross-corpus admission check (same split as the
             # cross_corpus_near_dups registry query): its short-doc
             # path joins against the FULL other corpus's token table,
             # so its candidate volume is the one place corpus skew
-            # could go superlinear first (r6 verdict item 3).
+            # could go superlinear first.
             xcounts[label] = minhash_across_counts(
                 docs.filter(F.col("source") == "src0"),
                 docs.filter(F.col("source") != "src0"),
@@ -278,7 +275,11 @@ def main() -> None:
                     cust, "c_name", "c_custkey", max_dist=max_dist
                 )
                 _clear_storage(spark)
-            fuzzy[f"{key}_counts"] = _ctable(fcounts)
+            # Only the index size and the output fit the final line's
+            # 2000-char budget; tools/sf3_canary.py prints the funnel.
+            fuzzy[f"{key}_counts"] = _ctable(
+                fcounts, ("variant_rows", "pairs")
+            )
             fuzzy[f"{key}_replicas"] = [freps["base"], freps["sf1"]]
 
         out["sf1"] = {
@@ -291,8 +292,8 @@ def main() -> None:
             },
             # All five metrics from minhash_pair_counts, including the
             # short-doc completeness path's volume drivers
-            # (short_candidates / hot_shingles / hot_heavy_docs — r6
-            # verdict item 3): a superlinear ratio in ANY of them is
+            # (short_candidates / hot_shingles / hot_heavy_docs): a
+            # superlinear ratio in ANY of them is
             # the candidate-generator O(n^2) signal, window-free.
             "minhash_counts": _ctable(counts),
             "gram_counts": _ctable(

@@ -9,6 +9,7 @@ count rows/bytes/nulls in a 100 TB pipeline without a second scan.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -35,3 +36,28 @@ def observed_rows_and_nulls(df: DataFrame, cols: list[str]):
         F.sum(F.col(c).isNull().cast("long")).alias(f"nulls_{c}") for c in cols
     ]
     return observed(df, *metrics)
+
+
+def stage_counts(stages: dict[str, DataFrame]) -> dict[str, int]:
+    """Row count of each named stage frame of one operator build, in
+    order. Each frame is persisted before it is counted, so a later
+    stage reads the earlier ones through Spark's cache manager instead
+    of recomputing them (uncached, each MinHash count cost 0.5-0.8 s
+    more at sf0.1). Only the frames persisted here are unpersisted,
+    never every persisted RDD of the context, which would pull blocks
+    out from under a query on another thread; a frame cached on entry
+    stays cached. ``observe`` cannot serve: it rejects distinct
+    aggregates, sees only the output path, and reads 0 upstream of a
+    lazy ``localCheckpoint``.
+    """
+    counts: dict[str, int] = {}
+    persisted: list[DataFrame] = []
+    try:
+        for name, frame in stages.items():
+            if frame.storageLevel == StorageLevel.NONE:
+                persisted.append(frame.persist())
+            counts[name] = frame.count()
+    finally:
+        for frame in persisted:
+            frame.unpersist()
+    return counts

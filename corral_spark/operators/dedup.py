@@ -38,6 +38,7 @@ from pyspark.sql.types import (
 )
 from pyspark.sql.window import Window
 
+from corral_spark.functions.metrics import stage_counts
 from corral_spark.functions.text import (
     _NON_ALNUM as _NON_ALNUM_RE,
     split_words,
@@ -536,11 +537,10 @@ def minhash_verified_pairs(
     signature aggregation and the verification join.
     Output: (id_a, id_b, jaccard) exact, id_a < id_b.
     """
-    _, verified, _ = _minhash_kernel(
+    return _minhash_kernel(
         df, None, text_col, id_col, threshold, n_hashes, bands, shingle_n,
         short_df_max,
-    )
-    return verified
+    )["pairs"]
 
 
 def minhash_pair_counts(
@@ -554,8 +554,9 @@ def minhash_pair_counts(
     short_df_max: int = SHORT_DF_MAX,
 ) -> dict[str, int]:
     """Scaling diagnostic: the CANDIDATE-pair and verified-pair counts
-    of the minhash pipeline, computed off one materialized candidate
-    set. Counts are noise-free linearity evidence that wall-clock
+    of the minhash pipeline, counted off the kernel's own stage frames
+    (``stage_counts``: the pair count reads the cached candidate
+    set). Counts are noise-free linearity evidence that wall-clock
     timings on a shared host are not: if the corpus grows k-fold and
     candidates grow ~k-fold, the banded-LSH stage is linear and any
     superlinear *timing* is host noise; a superlinear candidate count
@@ -566,9 +567,11 @@ def minhash_pair_counts(
     hot_heavy_docs or short_candidates ever grows superlinearly in
     corpus size, the degenerate stop-shingle population is taking
     over the fallback."""
-    return _kernel_counts(
-        df, None, text_col, id_col, threshold, n_hashes, bands, shingle_n,
-        short_df_max,
+    return stage_counts(
+        _minhash_kernel(
+            df, None, text_col, id_col, threshold, n_hashes, bands,
+            shingle_n, short_df_max,
+        )
     )
 
 
@@ -608,11 +611,10 @@ def minhash_pairs_across(
     id-ordered: the sides are different tables, so both orientations
     of the same id value are meaningful.
     """
-    _, verified, _ = _minhash_kernel(
+    return _minhash_kernel(
         existing, incoming, text_col, id_col, threshold, n_hashes,
         bands, shingle_n, short_df_max,
-    )
-    return verified
+    )["pairs"]
 
 
 def minhash_across_counts(
@@ -629,21 +631,12 @@ def minhash_across_counts(
     """minhash_pair_counts for the CROSS-corpus admission check: at a
     k-fold corpus with disjoint-replica structure every number must
     grow ~k-fold."""
-    return _kernel_counts(
-        existing, incoming, text_col, id_col, threshold, n_hashes, bands,
-        shingle_n, short_df_max,
+    return stage_counts(
+        _minhash_kernel(
+            existing, incoming, text_col, id_col, threshold, n_hashes,
+            bands, shingle_n, short_df_max,
+        )
     )
-
-
-def _kernel_counts(*args) -> dict[str, int]:
-    """Funnel counts of one _minhash_kernel run, its candidate set
-    materialized so the pair count does not regenerate it."""
-    cands, verified, diag = _minhash_kernel(*args, materialize_cands=True)
-    return {
-        "candidates": cands.count(),
-        "pairs": verified.count(),
-        **{name: frame.count() for name, frame in diag.items()},
-    }
 
 
 _INTEGRAL_TYPES = (ByteType, ShortType, IntegerType, LongType)
@@ -659,8 +652,7 @@ def _minhash_kernel(
     bands: int,
     shingle_n: int,
     short_df_max: int,
-    materialize_cands: bool = False,
-) -> tuple[DataFrame, DataFrame, dict[str, DataFrame]]:
+) -> dict[str, DataFrame]:
     """The MinHash candidate + verification pipeline behind
     minhash_verified_pairs, minhash_pairs_across and their counts,
     over ONE side-tagged shingle frame (__side, id, __sh).
@@ -677,11 +669,9 @@ def _minhash_kernel(
     is id_a < id_b; across corpora it is id_a from existing, id_b from
     incoming, each cross pair once.
 
-    ``materialize_cands`` cuts lineage at the candidate set so a
-    counting caller can count candidates AND verified pairs without
-    recomputing candidate generation; the normal path leaves it lazy.
-    Third return value: lazy frames for the short-path canary
-    (short_candidates, hot_shingles, hot_heavy_docs).
+    Returns the lazy stage frames by name: ``candidates``, the output
+    ``pairs``, and the short-path canary frames ``short_candidates``,
+    ``hot_shingles`` and ``hot_heavy_docs``.
     """
     sides = [existing] if incoming is None else [existing, incoming]
     last = len(sides) - 1
@@ -788,8 +778,6 @@ def _minhash_kernel(
     )
     short_cands, short_diag = _short_cands(ptok, threshold, last, short_df_max)
     cands = cands.unionByName(short_cands).dropDuplicates(["id_a", "id_b"])
-    if materialize_cands:
-        cands = materialize(cands, eager=False)
 
     def shingles(side: int, suffix: str) -> DataFrame:
         return shing.filter(F.col("__side") == side).select(
@@ -813,7 +801,9 @@ def _minhash_kernel(
     )
     # Deduped diag frame — the count canary reports distinct short-path
     # candidate pairs, while the pipeline defers dedup to the union.
-    return cands, verified, {
+    return {
+        "candidates": cands,
+        "pairs": verified,
         "short_candidates": short_cands.dropDuplicates(["id_a", "id_b"]),
         **short_diag,
     }
@@ -1521,17 +1511,18 @@ def prefix_filter_jaccard_pairs(
     (a, b) pair can still carry whichever duplicate's jaccard
     verified, so dedupe ids upstream.
     """
-    return _ppjoin_stages(df, text_col, id_col, threshold)[2]
+    return _ppjoin_stages(df, text_col, id_col, threshold)["output_pairs"]
 
 
 def _ppjoin_stages(
     df: DataFrame, text_col: str, id_col: str, threshold: float
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """``prefix_filter_jaccard_pairs`` returning its stage frames
-    ``(cands, gpairs, out)``: distinct candidate group pairs, verified
-    group pairs with their jaccard, and the expanded doc-pair output.
-    The operator and its funnel canary ``ppjoin_counts`` both build
-    through here, so the canary counts the frames the operator runs."""
+) -> dict[str, DataFrame]:
+    """``prefix_filter_jaccard_pairs`` returning its stage frames by
+    name: ``candidate_group_pairs`` (distinct candidate group pairs),
+    ``verified_group_pairs`` (with their jaccard) and the expanded
+    doc-pair output ``output_pairs``. The operator and its funnel
+    canary ``ppjoin_counts`` both build through here, so the canary
+    counts the frames the operator runs."""
     from pyspark.sql.window import Window
 
     t = float(threshold)
@@ -1763,7 +1754,11 @@ def _ppjoin_stages(
             F.lit(1.0).alias("jaccard"),
         )
     )
-    return cands, gpairs, cross.unionByName(within)
+    return {
+        "candidate_group_pairs": cands,
+        "verified_group_pairs": gpairs,
+        "output_pairs": cross.unionByName(within),
+    }
 
 
 def ppjoin_counts(
@@ -1775,7 +1770,8 @@ def ppjoin_counts(
     """Linearity diagnostic for ``prefix_filter_jaccard_pairs`` (the
     minhash_pair_counts discipline applied to the PPJoin path): the
     candidate funnel's volume drivers, counted off the exact frames
-    the operator builds (``_ppjoin_stages``).
+    the operator builds (``_ppjoin_stages``), each stage read from the
+    cached one before it rather than recomputed.
 
     * ``candidate_group_pairs`` — distinct group pairs surviving the
       prefix + length + positional filters (what verification pays);
@@ -1788,9 +1784,4 @@ def ppjoin_counts(
     tokens by construction, so prefixes can never collide across
     replicas.
     """
-    cands, gpairs, out = _ppjoin_stages(df, text_col, id_col, threshold)
-    return {
-        "candidate_group_pairs": cands.count(),
-        "verified_group_pairs": gpairs.count(),
-        "output_pairs": out.count(),
-    }
+    return stage_counts(_ppjoin_stages(df, text_col, id_col, threshold))

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from corral_spark.functions.metrics import stage_counts
 from corral_spark.materialize import materialize
 
 
@@ -118,7 +119,7 @@ def fuzzy_join(
     """
     return _fuzzy_stages(
         df, text_col, id_col, max_dist, max_block, cap_per_block
-    )[2]
+    )["pairs"]
 
 
 def _fuzzy_stages(
@@ -128,12 +129,14 @@ def _fuzzy_stages(
     max_dist: int,
     max_block: int | None,
     cap_per_block: int | None,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """``fuzzy_join`` returning its stage frames ``(raw, cands, out)``:
-    the variant-key join products before the pair dedup, the distinct
-    candidate pairs, and the verified output. The operator and its
-    funnel canary ``fuzzy_candidate_counts`` both build through here,
-    so the canary counts the frames the operator runs."""
+) -> dict[str, DataFrame]:
+    """``fuzzy_join`` returning its stage frames by name:
+    ``variant_rows`` (the materialized (id, key) index the self-join
+    reads), ``raw_pairs`` (the variant-key join products before the
+    pair dedup), ``distinct_candidates`` and the verified output
+    ``pairs``. The operator and its funnel canary ``fuzzy_counts``
+    both build through here, so the canary counts the frames the
+    operator runs."""
     from corral_spark.operators.dedup import spread_input
 
     slim = df.select(
@@ -245,7 +248,12 @@ def _fuzzy_stages(
         .select("id_a", "id_b", "text_a", "text_b", lev.alias("lev"))
         .filter(F.col("lev") >= 0)
     )
-    return raw, cands, out
+    return {
+        "variant_rows": ex,
+        "raw_pairs": raw,
+        "distinct_candidates": cands,
+        "pairs": out,
+    }
 
 
 def fuzzy_counts(
@@ -254,69 +262,28 @@ def fuzzy_counts(
     id_col: str,
     max_dist: int = 1,
 ) -> dict[str, int]:
-    """Scaling diagnostic: the two volume drivers
-    of the exact fuzzy join, as noise-free linearity evidence in the
-    style of ``dedup.minhash_pair_counts``. On the marker-perturbed
-    ``customer_fuzzy`` corpus (tools/scale_data.py) cross-replica
-    pairs are impossible by construction, so at R disjoint replicas a
-    linear engine must read EXACTLY R x both counters:
+    """Scaling diagnostic: the candidate funnel of the exact fuzzy
+    join, as noise-free linearity evidence in the style of
+    ``dedup.minhash_pair_counts``, counted off the very frames the
+    operator builds (``_fuzzy_stages``):
 
     * ``variant_rows`` — the deletion-neighborhood index size (the
       widest exchange in the plan; per-row neighborhood size depends
       only on the string, so replicas contribute identically);
-    * ``pairs`` — the verified lev <= max_dist output (the
-      blocking-completeness contract of ``fuzzy_join``: a superlinear
-      ratio here means candidates leaked across blocks; a sublinear
-      one means blocking dropped qualifying pairs).
-    """
-    variant_rows = fuzzy_counts_variant_rows(df, text_col, max_dist)
-    pairs = fuzzy_join(df, text_col, id_col, max_dist=max_dist).count()
-    return {"variant_rows": int(variant_rows), "pairs": int(pairs)}
-
-
-def fuzzy_candidate_counts(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    max_dist: int = 1,
-) -> dict[str, int]:
-    """Extended linearity diagnostic: the FULL candidate funnel of the
-    exact fuzzy join, counted off the very frames the operator builds
-    (``_fuzzy_stages`` — no reimplementation that could drift):
-
-    * ``variant_rows`` — deletion-neighborhood index size;
     * ``raw_pairs`` — variant-key join products before the pair dedup
       (the widest stream in the plan);
     * ``distinct_candidates`` — the deduplicated candidate pair set
       (what verification actually pays for);
-    * ``verified_pairs`` — the lev <= max_dist output.
+    * ``pairs`` — the verified lev <= max_dist output (the
+      blocking-completeness contract of ``fuzzy_join``: a superlinear
+      ratio here means candidates leaked across blocks; a sublinear
+      one means blocking dropped qualifying pairs).
 
-    On R disjoint marker-perturbed replicas every counter must read
-    EXACTLY R x its base value — cross-replica candidates are
-    impossible by construction (tools/scale_data.py).
+    On the marker-perturbed ``customer_fuzzy`` corpus
+    (tools/scale_data.py) cross-replica candidates are impossible by
+    construction, so at R disjoint replicas a linear engine must read
+    EXACTLY R x every counter.
     """
-    raw, cands, out = _fuzzy_stages(df, text_col, id_col, max_dist, None, None)
-    return {
-        "variant_rows": fuzzy_counts_variant_rows(df, text_col, max_dist),
-        "raw_pairs": raw.count(),
-        "distinct_candidates": cands.count(),
-        "verified_pairs": out.count(),
-    }
-
-
-def fuzzy_counts_variant_rows(
-    df: DataFrame, text_col: str, max_dist: int
-) -> int:
-    """Shared variant-index-size counter (one definition for
-    fuzzy_counts and fuzzy_candidate_counts)."""
-    txt = F.col(text_col)
-    total = (
-        df.select(
-            F.size(_deletion_neighborhood(txt, max_dist)).alias("nv")
-        )
-        # SUM over zero rows is NULL, not 0 — coalesce so an empty
-        # input reports 0 instead of raising on int(None).
-        .agg(F.coalesce(F.sum("nv"), F.lit(0)).alias("s"))
-        .collect()[0]["s"]
+    return stage_counts(
+        _fuzzy_stages(df, text_col, id_col, max_dist, None, None)
     )
-    return int(total)

@@ -703,14 +703,6 @@ def _bm25_oracle() -> str:
     )
 
 
-def bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Every BM25-scored document (doc_id, dl, n_terms, tf_total,
-    bm25_micro) — the shared scoring frame behind bm25_top_docs and
-    rrf_hybrid_docs. Plan shape documented on
-    bm25_top_docs; the SQL twin is _bm25_scored_sql()."""
-    return _bm25_scored_frame(spark, sf_dir)
-
-
 @register(
     "bm25_top_docs",
     oracle=_bm25_oracle(),
@@ -735,7 +727,11 @@ def bm25_top_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bm25_scored_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+def bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every BM25-scored document (doc_id, dl, n_terms, tf_total,
+    bm25_micro) — the shared scoring frame behind bm25_top_docs and
+    rrf_hybrid_docs. Plan shape documented on bm25_top_docs; the SQL
+    twin is _bm25_scored_sql()."""
     docs = load_table(spark, sf_dir, "documents")
 
     # NB: the predicate must be an ARITY-1 lambda — F.filter treats a

@@ -1,4 +1,5 @@
-"""Source-hygiene checks over the ``corral_spark`` package.
+"""Source-hygiene checks over the ``corral_spark`` package and
+``bench.py``.
 
 Query modules are named by the family of operators they exercise, not
 by the order they were added, and the history of the project lives in
@@ -54,7 +55,7 @@ def test_query_modules_are_named_by_family():
 def test_no_round_tags_in_comments_or_docstrings():
     hits = [
         f"{path.relative_to(PKG.parent)}:{line}: {tag}"
-        for path in sorted(PKG.rglob("*.py"))
+        for path in [*sorted(PKG.rglob("*.py")), PKG.parent / "bench.py"]
         for line, tag in round_tags(path.read_text())
     ]
     assert not hits, f"{len(hits)} round tags:\n" + "\n".join(hits)

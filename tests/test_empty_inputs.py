@@ -32,10 +32,16 @@ def test_query_survives_empty_tables(spark, empty_sf_dir, name):
 
 
 def test_fuzzy_counts_empty_input(spark):
-    """r11 ADVICE item 1: SUM over zero rows is NULL; fuzzy_counts
-    must report {0, 0} on an empty frame, not raise on int(None)."""
+    """An aggregate over zero rows is NULL, not 0; fuzzy_counts must
+    report a zero for every funnel stage on an empty frame, not raise
+    or report NULL."""
     from corral_spark.operators.fuzzy import fuzzy_counts
 
     empty = spark.createDataFrame([], "c_custkey: long, c_name: string")
     got = fuzzy_counts(empty, "c_name", "c_custkey", max_dist=1)
-    assert got == {"variant_rows": 0, "pairs": 0}
+    assert got == {
+        "variant_rows": 0,
+        "raw_pairs": 0,
+        "distinct_candidates": 0,
+        "pairs": 0,
+    }

@@ -20,10 +20,10 @@ for docs/ppjoin if missing. The fuzzy family rebuilds its
 marker-perturbed customer_fuzzy corpora on every run: the R=1 base
 under <dir>/fuzzy_base, the R replicas under <dir>/fuzzy
 (cross-replica lev >= 18 guaranteed by tools/scale_data.py).
-r16 verdict item 6 added the fuzzy (variant_rows / raw_pairs /
-distinct_candidates / verified_pairs via fuzzy_candidate_counts) and ppjoin
-(candidate_group_pairs / verified_group_pairs / output_pairs via
-ppjoin_counts) families, counted off the operators' own frames.
+The fuzzy (variant_rows / raw_pairs / distinct_candidates / pairs via
+fuzzy_counts) and ppjoin (candidate_group_pairs / verified_group_pairs
+/ output_pairs via ppjoin_counts) families are counted off the
+operators' own frames.
 Exit 1 on any non-exact ratio.
 """
 
@@ -101,13 +101,9 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
+    from bench import _clear_storage
     from corral_spark.operators.dedup import ppjoin_counts
-    from corral_spark.operators.fuzzy import fuzzy_candidate_counts
-
-    def _clear() -> None:
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist(False)
+    from corral_spark.operators.fuzzy import fuzzy_counts
 
     results = {"base": {}, f"sf{r}/10": {}}
     for label, d in (("base", BASE), (f"sf{r}/10", out)):
@@ -127,7 +123,7 @@ def main() -> int:
                 "doc_id",
                 threshold=0.5,
             )
-            _clear()
+            _clear_storage(spark)
         if "ppjoin" in families:
             # threshold 0.9 = the registry query's parameter, so the
             # counters match the r16 measured funnel (1.8M candidates
@@ -135,16 +131,16 @@ def main() -> int:
             results[label]["ppjoin"] = ppjoin_counts(
                 docs, "text", "doc_id", threshold=0.9
             )
-            _clear()
+            _clear_storage(spark)
         if "fuzzy" in families:
             fd = fuzzy_dirs["base" if label == "base" else "big"]
             cust = spark.read.parquet(
                 os.path.join(fd, "customer_fuzzy.parquet")
             )
-            results[label]["fuzzy_d1"] = fuzzy_candidate_counts(
+            results[label]["fuzzy_d1"] = fuzzy_counts(
                 cust, "c_name", "c_custkey", max_dist=1
             )
-            _clear()
+            _clear_storage(spark)
 
     base, big = results["base"], results[f"sf{r}/10"]
     bad = []
